@@ -9,6 +9,7 @@ from __future__ import annotations
 import math
 import re
 import time
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 # Names and units as the benchmark contract restricts them.
@@ -120,18 +121,7 @@ class NullTracer:
     """Tracing off: spans cost one attribute lookup and a no-op."""
 
     def span(self, name: str, op: str | None = None):
-        return _NULL_CTX
-
-
-class _NullCtx:
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-
-_NULL_CTX = _NullCtx()
+        return nullcontext()
 
 
 def _covered(intervals: list[tuple[float, float]], lo: float, hi: float) -> float:

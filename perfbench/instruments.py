@@ -40,6 +40,7 @@ class SparkCounters:
         self.sc = spark.sparkContext
         self.status = self.sc.statusTracker()
         self.store = self.sc._jsc.sc().statusStore()
+        self.bus = self.sc._jsc.sc().listenerBus()
         self._n = 0
 
     @contextmanager
@@ -57,6 +58,9 @@ class SparkCounters:
     def group_stats(self, gid: str) -> dict:
         """Jobs, executed stages and tasks of one job group, with the
         status store's per-stage sums."""
+        # the status store is fed asynchronously by the listener bus: wait
+        # for the group's last task-end events, or a read can miss them
+        self.bus.waitUntilEmpty(60_000)
         out = dict.fromkeys(
             ("jobs", "stages", "tasks", "executor_run_ms", "job_wall_ms",
              "input_bytes", "output_bytes", "shuffle_write_bytes",

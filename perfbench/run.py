@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 15 --trace 0
 
 Run from the repository root. Builds a store from a seeded corpus, runs
 one workload (``serve`` or ``ingest``, see ``workloads.py``) for
@@ -108,4 +108,9 @@ def main(argv=None) -> int:
 
 
 if __name__ == "__main__":
+    # one string-hash seed for every run, so set and dict orders in the
+    # engine's driver-side planning repeat from process to process
+    if os.environ.get("PYTHONHASHSEED") != "0":
+        os.environ["PYTHONHASHSEED"] = "0"
+        os.execv(sys.executable, [sys.executable, *sys.argv])
     sys.exit(main())

@@ -219,3 +219,14 @@ def test_query_logs_are_deterministic_and_warmup_is_disjoint():
     assert repeats == len(log) // C.REPEAT_EVERY
     for bt in C.distinct_batches(log, 8):
         assert len(set(bt)) == 8
+
+
+def test_batch_rows_group_by_query_in_rank_order():
+    import workloads as W
+
+    rows = [{"query_id": "1", "docid": 4, "score": 1.0},
+            {"query_id": "0", "docid": 9, "score": 2.0},
+            {"query_id": "1", "docid": 2, "score": 3.0},
+            {"query_id": "1", "docid": 1, "score": 1.0}]
+    assert W._rows(rows, batch=True) == {"0": [(9, 2.0)],
+                                          "1": [(2, 3.0), (1, 1.0), (4, 1.0)]}

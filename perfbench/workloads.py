@@ -14,7 +14,8 @@ process and one client thread.
 
 Every answer is checked against the DuckDB oracle in ``corpus``. The
 fused batch path (``wand_topk_batch``) has no timed workload of its own;
-every traced run times it on a few batches after the timed window.
+every traced run times it on a few batches after the timed window and
+checks their answers too.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from __future__ import annotations
 import os
 import statistics
 import time
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 import corpus as C
@@ -34,27 +36,31 @@ DRIVER_MEMORY = "2g"  # get_spark defaults to 16g, above a 15 GB machine
 N_BUCKETS = 3  # = cores: one wave of scorer tasks per query
 N_SEGMENTS = 1
 K = 10
-WARM_DOCS = 48  # ingest's warm-up build
+# Bulk builds pack 64-posting blocks (the engine's default is 1024): with
+# ~130 docs per bucket a head term then spans several blocks, so the
+# block-max prune ratios can move when docids are reordered. Streamed
+# epochs and compaction keep the engine's default.
+BLOCK_POSTINGS = 64
 
-SERVE_DOCS = 600
+SERVE_DOCS = 400
 WARM_QUERIES = 4  # distinct warm-up queries, terms disjoint from the timed log
-WARM_PASSES = 3  # per-query latency settles after 2-3 passes
+WARM_PASSES = 2  # per-query latency settles after 2-3 passes
 BATCH_SIZE = 16
 
-INGEST_BULK_DOCS = 600
-ROUND_DOCS = 200
+INGEST_BULK_DOCS = 400
+ROUND_DOCS = 150
 # ingest's timed work is fixed, one compaction cycle: the second round
 # reaches MIN_FILES_TO_MERGE live segments and compacts. A time-bound
 # round count would flip between 2 and 3 rounds with the host's speed.
+# serve's traced tail streams the same rounds into its store.
 ROUNDS = 2
-FRESH_QUERIES = 5  # per streamed round
+FRESH_QUERIES = 6  # per streamed round: 12 latency samples a run
 MIN_FILES_TO_MERGE = 3
 MERGE_WIDTH = 2
 
 MIN_OPS = 8  # the timed window always completes this many operations
 EXACT_OPS = 8  # exact counters are taken over this many leading ops
 EXACT_BATCHES = 2
-EXACT_ROUNDS = 2
 LOG_LEN = 600
 
 
@@ -158,6 +164,7 @@ def bulk_build(b: Bench, web, root: str, text_n: int):
         store = build_segments(
             b.spark, docs, SegmentStore(root), n_segments=N_SEGMENTS,
             n_buckets=N_BUCKETS, with_positions=True, field_postings=fp,
+            block_postings=BLOCK_POSTINGS,
         )
         wall = time.perf_counter() - t0
     b.layer["segments.build_s"] = wall
@@ -169,31 +176,16 @@ def bulk_build(b: Bench, web, root: str, text_n: int):
     return store, wall
 
 
-def warmup_build(b: Bench, tbl, lo: int) -> None:
-    """One small build through the same path on docs outside the measured
-    corpus, so ingest's timed bulk build measures the build rather than
-    the session's lazy start-up (JIT, Python workers, codegen). serve
-    keeps its cold build inside set-up instead: the warm-up would cost
-    more set-up time than it saves."""
-    with b.span("warmup.build"):
-        bulk_build(b, web_frame(b, tbl, lo, lo + WARM_DOCS),
-                   os.path.join(b.work, "warm-store"), 1)
-
-
-def bucketed_handle(b: Bench, store, name: str):
+def save_layout(b: Bench, store, name: str) -> str:
+    """The write-time bucketed table of ``store``; returns its name."""
     from open_source_search_engine_spark.operators.segments import save_bucketed
-    from open_source_search_engine_spark.operators.wand import PackedIndex
 
     t0 = time.perf_counter()
     with b.span("segments.save_bucketed"):
         table = save_bucketed(b.spark, store, name,
                               path=os.path.join(b.work, f"bucketed-{name}"))
     b.layer["segments.save_bucketed_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    with b.span("wand.open"):
-        pidx = PackedIndex(b.spark, store, packed=b.spark.table(table))
-    b.layer.setdefault("wand.open_s", time.perf_counter() - t0)
-    return pidx
+    return table
 
 
 def dir_bytes(path: str) -> int:
@@ -211,16 +203,8 @@ def text_bytes(texts) -> int:
 # --- traced helpers -------------------------------------------------------------
 
 
-class _NoGroup:
-    def __enter__(self):
-        return None
-
-    def __exit__(self, *exc):
-        return False
-
-
 def _group(b: Bench, name: str):
-    return b.counters.group(name) if b.trace else _NoGroup()
+    return b.counters.group(name) if b.trace else nullcontext()
 
 
 @dataclass
@@ -332,6 +316,7 @@ def _latency_summary(b: Bench, lat: list[float], name: str) -> None:
     b.info[f"{name}_n"] = len(lat)
     if pct is not None and pct > 50:
         b.info[f"{name}_p{pct:g}_ms"] = nearest_rank(lat, pct)
+    b.info[f"{name}_ms_each"] = [round(x, 1) for x in lat]
 
 
 def single_layers(b: Bench, recs: list[OpRecord]) -> None:
@@ -372,13 +357,16 @@ def batch_layers(b: Bench, recs: list[OpRecord]) -> None:
 
 
 def serve(b: Bench) -> None:
+    from open_source_search_engine_spark.operators.wand import PackedIndex
+
     n = SERVE_DOCS
+    streamed = ROUNDS * ROUND_DOCS  # the traced tail's rounds
     # corpus, query logs and oracle answers: none of it is timed
-    tbl, texts = C.corpus(n + ROUND_DOCS, b.seed)
+    tbl, texts = C.corpus(n + streamed, b.seed)
     warm, log = C.query_logs(texts[:n], LOG_LEN, WARM_QUERIES)
     asks = [(q, n) for q in dict.fromkeys(log)]
     answers = dict(zip(asks, C.cached_oracle(
-        {"w": "serve", "seed": b.seed, "n": n}, texts, asks, K)))
+        {"w": "serve", "seed": b.seed, "docs": len(texts)}, texts, asks, K)))
     b.info["text_bytes"] = text_bytes(texts[:n])
 
     t0 = time.perf_counter()
@@ -387,7 +375,11 @@ def serve(b: Bench) -> None:
         web = web_frame(b, tbl, 0, n)
         store, build_s = bulk_build(b, web, os.path.join(b.work, "store"),
                                     b.info["text_bytes"])
-        pidx = bucketed_handle(b, store, "packed_serve")
+        table = save_layout(b, store, "packed_serve")
+        t_open = time.perf_counter()
+        with b.span("wand.open"):
+            pidx = PackedIndex(b.spark, store, packed=b.spark.table(table))
+        b.layer["wand.open_s"] = time.perf_counter() - t_open
         with b.span("warmup.queries"):
             for _ in range(WARM_PASSES):
                 for q in warm:
@@ -425,7 +417,14 @@ def serve(b: Bench) -> None:
     _window_halves(b, lat, "window")
     if b.trace:
         single_layers(b, recs)
-        traced_probes(b, tbl, texts, n, store, pidx, log, stream=True)
+        probe_layers(b, tbl, n, store, pidx, log, answers, n)
+        # the window does not stream: stream the ingest rounds into this
+        # store, enough of them to reach the compaction trigger
+        with b.span("tail.stream"):
+            streamer = Streamer(b, store, tbl)
+            for r in range(ROUNDS):
+                streamer.round(n + r * ROUND_DOCS, n + (r + 1) * ROUND_DOCS, reopen=False)
+        stream_layers(b, streamer, text_bytes(texts[n:]))
 
 
 class Streamer:
@@ -442,7 +441,7 @@ class Streamer:
         self.epoch_jobs: list[int] = []
         self.write_bytes = 0
         self.compact_bytes = 0
-        self._compact_seen: set[str] = set()
+        self.compacted: set[str] = set()
 
     def round(self, lo: int, hi: int, reopen: bool):
         import pyarrow.parquet as pq
@@ -474,8 +473,7 @@ class Streamer:
         with b.span("segments.finalize_term_stats"), _group(b, "finalize") as gid:
             finalize_term_stats(b.spark, self.store)
         if b.trace:
-            run_id = str(sq.runId)
-            st = b.counters.group_stats(run_id)
+            st = b.counters.group_stats(str(sq.runId))
             fin = b.counters.group_stats(gid)
             self.epoch_jobs.append(st["jobs"])
             self.write_bytes += st["output_bytes"] + fin["output_bytes"]
@@ -491,9 +489,19 @@ class Streamer:
     def _scan_compactions(self) -> None:
         root = os.path.join(self.store.root, "postings_packed")
         for d in os.listdir(root):
-            if d.startswith("segment=compact-") and d not in self._compact_seen:
-                self._compact_seen.add(d)
+            if d.startswith("segment=compact-") and d not in self.compacted:
+                self.compacted.add(d)
                 self.compact_bytes += dir_bytes(os.path.join(root, d))
+
+
+def stream_layers(b: Bench, streamer: Streamer, streamed_text: int) -> None:
+    """Per-layer metrics of a traced streamer's rounds."""
+    b.layer["incremental.epoch_p50_s"] = _p50(streamer.epoch_s)
+    b.layer["incremental.jobs_per_epoch"] = statistics.mean(streamer.epoch_jobs)
+    b.layer["ingest.write_bytes_per_text_byte"] = streamer.write_bytes / streamed_text
+    b.layer["segments.compactions"] = len(streamer.compacted)
+    b.layer["segments.compact_rewrite_bytes_per_text_byte"] = (
+        streamer.compact_bytes / streamed_text)
 
 
 def _drop_handle(pidx) -> None:
@@ -505,17 +513,24 @@ def _drop_handle(pidx) -> None:
 def ingest(b: Bench) -> None:
     nb = INGEST_BULK_DOCS
     total = nb + ROUNDS * ROUND_DOCS
-    tbl, texts = C.corpus(total + WARM_DOCS, b.seed)
+    tbl, texts = C.corpus(total, b.seed)
     _warm, log = C.query_logs(texts[:nb], LOG_LEN, WARM_QUERIES)
     fresh = list(dict.fromkeys(log))  # every reopened handle starts cold
-    asks = [(fresh[r * FRESH_QUERIES + j], nb + (r + 1) * ROUND_DOCS)
-            for r in range(ROUNDS) for j in range(FRESH_QUERIES)]
+    round_asks = [(fresh[r * FRESH_QUERIES + j], nb + (r + 1) * ROUND_DOCS)
+                  for r in range(ROUNDS) for j in range(FRESH_QUERIES)]
+    # the traced tail's fused batches run on the final store
+    asks = list(dict.fromkeys(
+        round_asks + [(q, total) for bt in C.distinct_batches(log, BATCH_SIZE)[:EXACT_BATCHES]
+                      for q in bt]))
     answers = dict(zip(asks, C.cached_oracle(
-        {"w": "ingest", "seed": b.seed, "nb": nb, "rd": ROUND_DOCS}, texts, asks, K)))
+        {"w": "ingest", "seed": b.seed, "docs": len(texts), "nb": nb, "rd": ROUND_DOCS},
+        texts, asks, K)))
+    # no warm-up build: a run is short enough for the whole benchmark's
+    # time budget only without one, so the bulk build is the session's
+    # first Spark work on both workloads
     t0 = time.perf_counter()
     with b.span("setup"):
         start_session(b)
-        warmup_build(b, tbl, total)
     b.e2e["setup_s"] = time.perf_counter() - t0
 
     chk = Checker(b, answers)
@@ -534,40 +549,31 @@ def ingest(b: Bench) -> None:
                 _drop_handle(pidx)
                 pidx = streamer.round(lo, hi, reopen=True)
             round_s.append(time.perf_counter() - t_r)
-            for j in range(FRESH_QUERIES):
-                key = asks[r * FRESH_QUERIES + j]
+            for key in round_asks[r * FRESH_QUERIES:(r + 1) * FRESH_QUERIES]:
                 try:
-                    got, rec = run_query(b, pidx, key[0], exact=r < EXACT_ROUNDS)
+                    got, rec = run_query(b, pidx, key[0], exact=True)
                 except Exception as exc:
                     chk.fail(key, exc)
                     continue
                 recs.append(rec)  # every reopened handle is cold: all first-seen
                 chk.check(key, got)
     chk.close()
-    streamed = len(round_s) * ROUND_DOCS
     lat = [r.ms for r in recs]
     b.e2e["latency_p50_ms"] = _p50(lat)
-    b.e2e["throughput_per_s"] = streamed / sum(round_s)
+    b.e2e["throughput_per_s"] = ROUNDS * ROUND_DOCS / sum(round_s)
     b.e2e["build_docs_per_s"] = nb / build_s
-    b.e2e["store_bytes_per_text_byte"] = (
-        dir_bytes(store.root) / text_bytes(texts[: nb + streamed]))
+    b.e2e["store_bytes_per_text_byte"] = dir_bytes(store.root) / text_bytes(texts[:total])
     _latency_summary(b, lat, "fresh_query")
     b.info["ingest_docs_per_s"] = b.e2e["throughput_per_s"]
-    b.info["rounds"] = len(round_s)
     b.info["round_p50_s"] = _p50(round_s)
     _window_halves(b, [s * 1000 for s in round_s], "round")
     if b.trace:
         b.layer["wand.open_s"] = _p50(streamer.open_s)
-        b.layer["incremental.epoch_p50_s"] = _p50(streamer.epoch_s)
-        b.layer["incremental.jobs_per_epoch"] = (
-            sum(streamer.epoch_jobs[:EXACT_ROUNDS]) / EXACT_ROUNDS)
-        streamed_text = text_bytes(texts[nb: nb + streamed])
-        b.layer["ingest.write_bytes_per_text_byte"] = streamer.write_bytes / streamed_text
-        b.layer["segments.compactions"] = len(streamer._compact_seen)
-        b.layer["segments.compact_rewrite_bytes_per_text_byte"] = (
-            streamer.compact_bytes / streamed_text)
+        stream_layers(b, streamer, text_bytes(texts[nb:total]))
         single_layers(b, recs)
-        traced_probes(b, tbl, texts, nb, store, pidx, log, bucketed=True)
+        probe_layers(b, tbl, nb, store, pidx, log, answers, total)
+        # the window does not write the bucketed layout: time it on the final store
+        save_layout(b, store, "packed_tail")
     _drop_handle(pidx)
 
 
@@ -577,18 +583,17 @@ WORKLOADS = {"serve": serve, "ingest": ingest}
 # --- traced-only probes ------------------------------------------------------------
 
 
-def traced_probes(b: Bench, tbl, texts, n_docs: int, store, pidx, log,
-                  stream=False, bucketed=False):
-    """Layer measurements beyond the timed work: layers timed alone, the
-    prune ratios, and a short tail for layers the workload's own loop
-    does not exercise, so every traced run reports every layer."""
+def probe_layers(b: Bench, tbl, n_docs: int, store, pidx, log, answers, lim: int):
+    """Layer measurements beyond the timed work, shared by both workloads:
+    extraction and the explode timed alone over the bulk corpus, the
+    store's fan-out, the prune ratios, and EXACT_BATCHES fused batches
+    whose answers are checked against the oracle over ``lim`` docs."""
     from pyspark.sql import functions as F
 
     from open_source_search_engine_spark.extraction import with_extracted_text
     from open_source_search_engine_spark.operators.index_build import build_index
 
     with b.span("probes"):
-        sample = list(dict.fromkeys(log))[:EXACT_OPS]
         web = web_frame(b, tbl, 0, n_docs)
         t0 = time.perf_counter()
         with b.span("extraction.alone"):
@@ -610,7 +615,7 @@ def traced_probes(b: Bench, tbl, texts, n_docs: int, store, pidx, log,
         tot = {"buckets": 0, "buckets_scored": 0, "blocks": 0, "blocks_scored": 0,
                "bytes_total": 0, "bytes_scored": 0}
         with b.span("prune_stats"):
-            for q in sample:
+            for q in list(dict.fromkeys(log))[:EXACT_OPS]:
                 ps = pidx.prune_stats(list(q.terms), k=K, mode=q.engine_mode,
                                       neg_terms=list(q.neg) or None)
                 for key in tot:
@@ -618,21 +623,20 @@ def traced_probes(b: Bench, tbl, texts, n_docs: int, store, pidx, log,
         b.layer["prune.buckets_scored_ratio"] = tot["buckets_scored"] / max(tot["buckets"], 1)
         b.layer["prune.blocks_scored_ratio"] = tot["blocks_scored"] / max(tot["blocks"], 1)
         b.layer["prune.bytes_scored_ratio"] = tot["bytes_scored"] / max(tot["bytes_total"], 1)
+        b.info["prune_blocks_per_bucket"] = tot["blocks"] / max(tot["buckets"], 1)
 
+        chk = Checker(b, answers)
+        recs = []
         with b.span("tail.batch"):
-            recs = [run_batch(b, pidx, bt, exact=True)[1]
-                    for bt in C.distinct_batches(log, BATCH_SIZE)[:EXACT_BATCHES]]
+            for bt in C.distinct_batches(log, BATCH_SIZE)[:EXACT_BATCHES]:
+                try:
+                    got, rec = run_batch(b, pidx, bt, exact=True)
+                except Exception as exc:  # every query of the batch fails
+                    for q in bt:
+                        chk.fail((q, lim), exc)
+                    continue
+                recs.append(rec)
+                for i, q in enumerate(bt):
+                    chk.check((q, lim), got.get(str(i), []))
+        chk.close()
         batch_layers(b, recs)
-        if bucketed:
-            bucketed_handle(b, store, "packed_tail")
-        if stream:
-            with b.span("tail.stream"):
-                streamer = Streamer(b, store, tbl)
-                streamer.round(n_docs, n_docs + ROUND_DOCS, reopen=False)
-            b.layer["incremental.epoch_p50_s"] = _p50(streamer.epoch_s)
-            b.layer["incremental.jobs_per_epoch"] = streamer.epoch_jobs[0]
-            b.layer["ingest.write_bytes_per_text_byte"] = streamer.write_bytes / text_bytes(
-                texts[n_docs: n_docs + ROUND_DOCS])
-            b.layer["segments.compactions"] = len(streamer._compact_seen)
-            b.layer["segments.compact_rewrite_bytes_per_text_byte"] = (
-                streamer.compact_bytes / text_bytes(texts[n_docs: n_docs + ROUND_DOCS]))
