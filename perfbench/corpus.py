@@ -114,24 +114,13 @@ class QueryGen:
         return Query(mode, tuple(terms))
 
 
-def query_logs(texts: list[str], n_timed: int, n_warm: int):
-    """(warm-up queries, timed log). The timed log is Zipf-popular:
-    every REPEAT_EVERY-th entry repeats an earlier query, picked with
-    weight 1/rank in first-seen order; the others are new queries. A
-    fixed repeat share keeps the latency median off the boundary
-    between the fast repeat mode and the slower first-seen mode."""
-    rng = np.random.Generator(np.random.PCG64(QUERY_STREAM))
-    tiers = term_tiers(texts)
-    warm_gen = QueryGen(tiers, 0, rng)
-    warm: list[Query] = []
-    while len(warm) < n_warm:
-        q = warm_gen.query()
-        if q not in warm:
-            warm.append(q)
-    gen = QueryGen(tiers, 1, rng)
+def _log(gen: QueryGen, n: int, rng) -> list[Query]:
+    """``n`` entries: every REPEAT_EVERY-th repeats an earlier query,
+    picked with weight 1/rank in first-seen order; the others are new
+    queries of ``gen``."""
     seen: list[Query] = []
     log: list[Query] = []
-    while len(log) < n_timed:
+    while len(log) < n:
         if len(log) % REPEAT_EVERY == REPEAT_EVERY - 1:
             w = 1.0 / np.arange(1, len(seen) + 1)
             log.append(seen[int(rng.choice(len(seen), p=w / w.sum()))])
@@ -140,7 +129,19 @@ def query_logs(texts: list[str], n_timed: int, n_warm: int):
         if q not in seen:
             seen.append(q)
             log.append(q)
-    return warm, log
+    return log
+
+
+def query_logs(texts: list[str], n_timed: int, n_warm: int):
+    """(warm-up log, timed log), both Zipf-popular logs of the SHAPES
+    cycle over disjoint halves of the vocabulary, so the warm-up runs the
+    timed mix without serving any timed query from a cache. A fixed
+    repeat share keeps the latency median off the boundary between the
+    fast repeat mode and the slower first-seen mode."""
+    rng = np.random.Generator(np.random.PCG64(QUERY_STREAM))
+    tiers = term_tiers(texts)
+    warm = _log(QueryGen(tiers, 0, rng), n_warm, rng)
+    return warm, _log(QueryGen(tiers, 1, rng), n_timed, rng)
 
 
 def distinct_batches(log: list[Query], size: int) -> list[list[Query]]:

@@ -7,10 +7,11 @@ process and one client thread.
   Every query pays plan construction, driver-cache lookups and one
   Spark job, so per-query fixed cost dominates.
 - ``ingest``: a bulk build from ``html`` (``extraction`` ->
-  ``segments.build_segments``), then streamed rounds through
+  ``segments.build_segments``), then ``ROUNDS`` streamed rounds through
   ``streaming.incremental.start_incremental_index`` with compaction
-  armed; after each round ``finalize_term_stats``, a fresh in-memory
-  ``PackedIndex`` and a few queries. Writes beside reads.
+  armed, each followed by ``finalize_term_stats``. After the bulk build
+  and after each round a fresh in-memory ``PackedIndex`` serves a few
+  first-seen queries. Writes beside reads.
 
 Every answer is checked against the DuckDB oracle in ``corpus``. The
 fused batch path (``wand_topk_batch``) has no timed workload of its own;
@@ -30,32 +31,41 @@ import corpus as C
 from harness import FailLedger, NullTracer, Tracer, nearest_rank, tail_percentile
 
 # --- pinned settings ----------------------------------------------------------
-CORES = min(3, os.cpu_count() or 1)
+# one task slot: queries here are fixed per-query cost, and more
+# concurrent task threads and Python workers than the host gives made
+# runs follow its contention (see perfbench/README.md, Pinned settings)
+CORES = 1
 SHUFFLE_PARTITIONS = 8  # session.get_spark's default (max(cores, 8)), pinned
 DRIVER_MEMORY = "2g"  # get_spark defaults to 16g, above a 15 GB machine
-N_BUCKETS = 3  # = cores: one wave of scorer tasks per query
+# The whole heap is committed and touched at JVM start (part of set-up),
+# so the timed work never page-faults fresh heap pages in: on a VM whose
+# host backs guest memory lazily those faults cost a varying amount.
+JVM_HEAP_OPTIONS = f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch"
+N_BUCKETS = 2
 N_SEGMENTS = 1
 K = 10
 # Bulk builds pack 64-posting blocks (the engine's default is 1024): with
-# ~130 docs per bucket a head term then spans several blocks, so the
+# ~150 docs per bucket a head term then spans several blocks, so the
 # block-max prune ratios can move when docids are reordered. Streamed
 # epochs and compaction keep the engine's default.
 BLOCK_POSTINGS = 64
 
-SERVE_DOCS = 400
-WARM_QUERIES = 4  # distinct warm-up queries, terms disjoint from the timed log
-WARM_PASSES = 2  # per-query latency settles after 2-3 passes
+SERVE_DOCS = 300
+# warm-up log entries before the timed window: the timed mix over a
+# disjoint vocabulary. Per-query latency on a fresh handle falls over
+# its first 15-20 queries (JIT and driver-side caches)
+WARM_LOG = 16
 BATCH_SIZE = 16
 
-INGEST_BULK_DOCS = 400
-ROUND_DOCS = 150
-# ingest's timed work is fixed, one compaction cycle: the second round
-# reaches MIN_FILES_TO_MERGE live segments and compacts. A time-bound
-# round count would flip between 2 and 3 rounds with the host's speed.
-# serve's traced tail streams the same rounds into its store.
-ROUNDS = 2
-FRESH_QUERIES = 6  # per streamed round: 12 latency samples a run
-MIN_FILES_TO_MERGE = 3
+INGEST_BULK_DOCS = 300
+ROUND_DOCS = 100
+# ingest's timed work is fixed, one compaction cycle: the streamed
+# round's segment beside the bulk one reaches MIN_FILES_TO_MERGE live
+# segments and compacts. A time-bound round count would flip with the
+# host's speed. serve's traced tail streams the same round into its store.
+ROUNDS = 1
+FRESH_QUERIES = 6  # per opened handle (bulk + each round): 12 latency samples a run
+MIN_FILES_TO_MERGE = 2
 MERGE_WIDTH = 2
 
 MIN_OPS = 8  # the timed window always completes this many operations
@@ -106,7 +116,7 @@ def start_session(b: Bench):
                 "spark.local.dir": os.path.join(b.work, "spark-local"),
                 "spark.sql.warehouse.dir": os.path.join(b.work, "warehouse"),
                 "spark.driver.extraJavaOptions": "-Djava.security.manager=allow "
-                f"-Djava.io.tmpdir={os.path.join(b.work, 'jtmp')}",
+                f"{JVM_HEAP_OPTIONS} -Djava.io.tmpdir={os.path.join(b.work, 'jtmp')}",
             },
         )
     b.layer["session.start_s"] = time.perf_counter() - t0
@@ -363,7 +373,7 @@ def serve(b: Bench) -> None:
     streamed = ROUNDS * ROUND_DOCS  # the traced tail's rounds
     # corpus, query logs and oracle answers: none of it is timed
     tbl, texts = C.corpus(n + streamed, b.seed)
-    warm, log = C.query_logs(texts[:n], LOG_LEN, WARM_QUERIES)
+    warm, log = C.query_logs(texts[:n], LOG_LEN, WARM_LOG)
     asks = [(q, n) for q in dict.fromkeys(log)]
     answers = dict(zip(asks, C.cached_oracle(
         {"w": "serve", "seed": b.seed, "docs": len(texts)}, texts, asks, K)))
@@ -381,11 +391,10 @@ def serve(b: Bench) -> None:
             pidx = PackedIndex(b.spark, store, packed=b.spark.table(table))
         b.layer["wand.open_s"] = time.perf_counter() - t_open
         with b.span("warmup.queries"):
-            for _ in range(WARM_PASSES):
-                for q in warm:
-                    run_query(b, pidx, q, exact=False)
+            for q in warm:
+                run_query(b, pidx, q, exact=False)
     b.e2e["setup_s"] = time.perf_counter() - t0
-    b.e2e["build_docs_per_s"] = n / build_s
+    b.info["build_docs_per_s"] = n / build_s
     b.e2e["store_bytes_per_text_byte"] = dir_bytes(store.root) / b.info["text_bytes"]
 
     chk = Checker(b, answers)
@@ -511,17 +520,22 @@ def _drop_handle(pidx) -> None:
 
 
 def ingest(b: Bench) -> None:
+    from open_source_search_engine_spark.operators.wand import PackedIndex
+
     nb = INGEST_BULK_DOCS
     total = nb + ROUNDS * ROUND_DOCS
     tbl, texts = C.corpus(total, b.seed)
-    _warm, log = C.query_logs(texts[:nb], LOG_LEN, WARM_QUERIES)
-    fresh = list(dict.fromkeys(log))  # every reopened handle starts cold
-    round_asks = [(fresh[r * FRESH_QUERIES + j], nb + (r + 1) * ROUND_DOCS)
-                  for r in range(ROUNDS) for j in range(FRESH_QUERIES)]
+    _warm, log = C.query_logs(texts[:nb], LOG_LEN, WARM_LOG)
+    fresh = list(dict.fromkeys(log))  # every opened handle starts cold
+    # phase 0 is the bulk store, phase r the store after streamed round r
+    lims = [nb + r * ROUND_DOCS for r in range(ROUNDS + 1)]
+    phase_asks = [[(fresh[p * FRESH_QUERIES + j], lim) for j in range(FRESH_QUERIES)]
+                  for p, lim in enumerate(lims)]
     # the traced tail's fused batches run on the final store
     asks = list(dict.fromkeys(
-        round_asks + [(q, total) for bt in C.distinct_batches(log, BATCH_SIZE)[:EXACT_BATCHES]
-                      for q in bt]))
+        [a for ph in phase_asks for a in ph]
+        + [(q, total) for bt in C.distinct_batches(log, BATCH_SIZE)[:EXACT_BATCHES]
+           for q in bt]))
     answers = dict(zip(asks, C.cached_oracle(
         {"w": "ingest", "seed": b.seed, "docs": len(texts), "nb": nb, "rd": ROUND_DOCS},
         texts, asks, K)))
@@ -535,38 +549,45 @@ def ingest(b: Bench) -> None:
 
     chk = Checker(b, answers)
     recs: list[OpRecord] = []
-    round_s: list[float] = []
+    step_s: list[float] = []  # bulk build + open, then each streamed round
+
+    def fresh_queries(pidx, phase: int) -> None:
+        for key in phase_asks[phase]:
+            try:
+                got, rec = run_query(b, pidx, key[0], exact=True)
+            except Exception as exc:  # counted as a failed operation
+                chk.fail(key, exc)
+                continue
+            recs.append(rec)
+            chk.check(key, got)
+
     with b.span("window"):
         web = web_frame(b, tbl, 0, nb)
+        t_r = time.perf_counter()
         store, build_s = bulk_build(b, web, os.path.join(b.work, "store"),
                                     text_bytes(texts[:nb]))
+        with b.span("wand.open"):
+            pidx = PackedIndex(b.spark, store)
+        step_s.append(time.perf_counter() - t_r)
+        fresh_queries(pidx, 0)
         streamer = Streamer(b, store, tbl)
-        pidx = None
         for r in range(ROUNDS):
-            lo, hi = nb + r * ROUND_DOCS, nb + (r + 1) * ROUND_DOCS
             t_r = time.perf_counter()
             with b.span("round", op=f"round{r}"):
                 _drop_handle(pidx)
-                pidx = streamer.round(lo, hi, reopen=True)
-            round_s.append(time.perf_counter() - t_r)
-            for key in round_asks[r * FRESH_QUERIES:(r + 1) * FRESH_QUERIES]:
-                try:
-                    got, rec = run_query(b, pidx, key[0], exact=True)
-                except Exception as exc:
-                    chk.fail(key, exc)
-                    continue
-                recs.append(rec)  # every reopened handle is cold: all first-seen
-                chk.check(key, got)
+                pidx = streamer.round(lims[r], lims[r + 1], reopen=True)
+            step_s.append(time.perf_counter() - t_r)
+            fresh_queries(pidx, r + 1)
     chk.close()
     lat = [r.ms for r in recs]
     b.e2e["latency_p50_ms"] = _p50(lat)
-    b.e2e["throughput_per_s"] = ROUNDS * ROUND_DOCS / sum(round_s)
-    b.e2e["build_docs_per_s"] = nb / build_s
+    b.e2e["throughput_per_s"] = total / sum(step_s)
     b.e2e["store_bytes_per_text_byte"] = dir_bytes(store.root) / text_bytes(texts[:total])
     _latency_summary(b, lat, "fresh_query")
-    b.info["ingest_docs_per_s"] = b.e2e["throughput_per_s"]
-    b.info["round_p50_s"] = _p50(round_s)
-    _window_halves(b, [s * 1000 for s in round_s], "round")
+    b.info["build_docs_per_s"] = nb / build_s
+    b.info["ingest_docs_per_s"] = ROUNDS * ROUND_DOCS / sum(step_s[1:])
+    b.info["step_s_each"] = [round(x, 2) for x in step_s]
+    _window_halves(b, lat, "fresh_query")
     if b.trace:
         b.layer["wand.open_s"] = _p50(streamer.open_s)
         stream_layers(b, streamer, text_bytes(texts[nb:total]))
