@@ -1,7 +1,8 @@
 """Second operator-coverage batch (SURVEY.md §2 A10/A11, B2/D19, C5,
-C12/H4, C13/C14/E3, D2): forward-doc fetch, tombstone deletes, bigram
-terms, URL normalization, link graph / siteRank, synonym expansion,
-exact distinct counts."""
+C12/H4, D2): forward-doc fetch, tombstone deletes, bigram terms, URL
+normalization, synonym expansion, exact distinct counts. The link
+graph and siteRank (C13/C14/E3) run over real extracted links in
+``linkextract`` / ``queries_web``."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from . import linkgraph as L
 from .bm25 import bm25_topk
 from .index_build import cached_index
 from .pipeline import shingles_col
@@ -184,24 +184,6 @@ def url_normalize(spark, sf_dir):
         host.alias("host"),
         F.regexp_extract(host, r"([a-z0-9-]+\.[a-z]+)$", 1).alias("domain"),
     )
-
-
-# --- C13/C14/E3: link graph + siteRank ------------------------------------
-
-
-# synthetic-link variants: E3/C14 driver rows come from the real
-# extracted web graph (queries_web.site_inlink_rank); these stay
-# pytest-gated
-@register("inlink_counts", L.INLINK_SQL, extended=True)
-def inlink_counts(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    return L.inlink_counts(docs, L.synth_links(docs))
-
-
-@register("site_rank", L.SITE_RANK_SQL, extended=True)
-def site_rank(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    return L.site_rank(docs, L.synth_links(docs))
 
 
 # --- D2: synonym expansion -------------------------------------------------

@@ -1,5 +1,5 @@
 """Coverage batch 2: forward fetch, tombstones, bigrams, URL
-normalization, link graph, synonyms, distinct counts — each against
+normalization, synonyms, distinct counts — each against
 its registered DuckDB oracle (driver-style comparison)."""
 
 from __future__ import annotations
@@ -15,8 +15,6 @@ from conftest import SF_CORRECT, assert_df_matches_duckdb, query_and_oracle
         "delete_tombstones",
         "bigram_postings",
         "url_normalize",
-        "inlink_counts",
-        "site_rank",
         "bm25_synonyms",
         "distinct_users",
     ],
@@ -24,15 +22,3 @@ from conftest import SF_CORRECT, assert_df_matches_duckdb, query_and_oracle
 def test_oracle_paired_ir2(spark, duck_correct, name):
     fn, sql = query_and_oracle(name)
     assert_df_matches_duckdb(fn(spark, SF_CORRECT), duck_correct, sql)
-
-
-def test_synth_links_deterministic(spark):
-    from open_source_search_engine_spark.operators.linkgraph import synth_links
-
-    docs = (
-        spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-        .withColumnRenamed("doc_id", "docid")
-    )
-    a = sorted(map(tuple, synth_links(docs).collect()))
-    b = sorted(map(tuple, synth_links(docs).collect()))
-    assert a == b and len(a) > 1000

@@ -328,6 +328,75 @@ def test_wand_density_matches_relational_formula(spark, pos_store):
     assert got == want
 
 
+def test_positional_kinds_on_bucketed_store(
+    spark, pos_store, tmp_path_factory
+):
+    """The kernel's bucketed positional path: on a write-time bucketed
+    store (``jvm_prune``) density, diversity, phrase and proximity
+    queries run the literal JVM prune with the kind-adjusted cut
+    (density/diversity divide it by the rank multiplier's max,
+    proximity subtracts its boost). Their answers must equal the
+    cache-store handle's, which the tests above pin to the relational
+    formulas — at a k small enough that the seed cut is live, and at
+    the default k."""
+    from open_source_search_engine_spark.operators.segments import (
+        save_bucketed,
+    )
+
+    path = str(tmp_path_factory.mktemp("idx_pos_bucketed")) + "/t"
+    save_bucketed(spark, pos_store, "packed_pos_bucketed_t", path)
+    try:
+        cached = PackedIndex(spark, pos_store)
+        disk = PackedIndex(
+            spark, pos_store, packed=spark.table("packed_pos_bucketed_t")
+        )
+        assert disk.jvm_prune and not cached.jvm_prune
+        cases = [
+            ("wand_density_topk", ["join", "filter"]),
+            ("wand_diversity_topk", ["join", "filter"]),
+            ("wand_phrase_topk", ["join", "filter"]),
+            ("wand_proximity_topk", ["join", "filter"]),
+        ]
+        for k in (2, 10):
+            for name, terms in cases:
+                want = [
+                    tuple(r)
+                    for r in getattr(cached, name)(terms, k=k).collect()
+                ]
+                got = [
+                    tuple(r)
+                    for r in getattr(disk, name)(terms, k=k).collect()
+                ]
+                assert want, (name, k)
+                assert got == want, (name, k)
+        # the k=2 cases prune: a live seed cut reaches the literal prune
+        spec = disk._query_spec(["join", "filter"], k=2, kind="density")
+        assert spec["cut"] > float("-inf")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS packed_pos_bucketed_t")
+
+
+def test_packed_index_close_releases_caches(spark, tmp_path_factory):
+    """``PackedIndex.close()`` (also via ``with``) unpersists the
+    handle's cached ``packed`` and ``term_stats`` and clears its
+    driver-side caches: open/close cycles leave the session's
+    persisted-RDD count where it started."""
+    root = str(tmp_path_factory.mktemp("idx_close"))
+    st = build_segments(
+        spark, _docs(spark), SegmentStore(root), n_segments=1, n_buckets=4
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        with PackedIndex(spark, st) as pidx:
+            assert pidx.wand_topk(["join", "filter"], k=5).collect()
+            assert jsc.getPersistentRDDs().size() > before
+        assert not (
+            pidx._term_cache or pidx._seed_cache or pidx._bound_cache
+        )
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_compaction_preserves_positions(spark, pos_store, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx_pos_compact"))
     cstore = compact_segments(spark, pos_store, out)

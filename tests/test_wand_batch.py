@@ -222,6 +222,9 @@ POS_BATCH = {
     # word_tids once reduced this to a single-term presence test)
     "phrase_dup": (["hash", "hash"], "phrase", None),
     "prox": (["join", "filter"], "proximity", None),
+    # repeated term: both paths score the deduped pair (the per-query
+    # path once measured the repeated term's gap to itself)
+    "prox_dup": (["join", "join", "filter"], "proximity", None),
     # per-query proximity weight via the optional 4th spec element
     "prox_w2": (["join", "filter"], "proximity", None, 1.5),
     "phrase_missing": (["join", "zzzznotaterm"], "phrase", None),
@@ -239,6 +242,9 @@ def _check_pos_batch(pidx):
         "phrase_same": pidx.wand_phrase_topk(["join", "filter"], k=10),
         "phrase_dup": pidx.wand_phrase_topk(["hash", "hash"], k=10),
         "prox": pidx.wand_proximity_topk(["join", "filter"], k=10),
+        "prox_dup": pidx.wand_proximity_topk(
+            ["join", "join", "filter"], k=10
+        ),
         "prox_w2": pidx.wand_proximity_topk(
             ["join", "filter"], k=10, prox_w=1.5
         ),
@@ -274,14 +280,18 @@ def test_batch_positional_matches_per_query_bucketed(
 
 
 def test_batch_positional_validation(spark, store, pos_store):
-    """Positional batch shapes validate their inputs: neg_terms and
-    non-positional stores are rejected, proximity needs exactly two
-    distinct terms."""
+    """Positional shapes validate their inputs: neg_terms and
+    non-positional stores are rejected (batch and single-query),
+    proximity needs exactly two distinct terms."""
     pidx_min = PackedIndex(spark, store)
     with pytest.raises(ValueError, match="positional store"):
         pidx_min.wand_topk_batch(
             {"q": (["join", "filter"], "phrase", None)}
         )
+    # the single-query positional path raises the same error (not an
+    # assert, which ``python -O`` would strip)
+    with pytest.raises(ValueError, match="positional store"):
+        pidx_min.wand_phrase_topk(["join", "filter"])
     pidx = PackedIndex(spark, pos_store)
     with pytest.raises(ValueError, match="neg_terms"):
         pidx.wand_topk_batch(
