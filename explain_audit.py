@@ -55,24 +55,23 @@ CHECKS = {
         ("SelectedBucketsCount", "pruned buckets' FILES are deselected at "
                                  "the bucketed scan — their blobs are "
                                  "never read"),
-        ("values:", "the sub-block row bound's per-(termid, bucket) "
-                    "constants are a nested map LITERAL in the filter — "
-                    "no per-query bound frames, no joins"),
+        ("element_at", "the sub-block row bound reads its per-(termid, "
+                       "bucket) thresholds from bucket-indexed array "
+                       "LITERALS in the filter — no per-query bound "
+                       "frames, no joins"),
         ("blockmax_tf", "row-level bound reads only the scalar extrema "
                         "columns, in the same codegen stage as the scan"),
     ],
     "wand_batch_bucketed_jvmprune": [
-        ("BroadcastHashJoin", "the (bucket, termid, thr) threshold map "
-                              "— a few KB of scalars folded driver-side "
-                              "from ONE bound aggregate — broadcast onto "
-                              "the blob scan"),
-        ("isnull(thr", "row filter keeps NULL-thr rows (neg terms, "
-                       "no-seed queries) and drops sub-blocks below "
-                       "every interested query's threshold before "
-                       "Arrow; the thresholds fold driver-side from "
-                       "the memoized per-(termid, bucket) bound cache "
-                       "(_bounds_for) — a warm batch adds no scan or "
-                       "job beyond the pruned blob scan itself"),
+        ("In(bucket", "the batch runs the single-query prune with Q "
+                      "specs: buckets no query can use are deselected "
+                      "by a pushed-down bucket IN predicate"),
+        ("element_at", "sub-blocks below every interested query's "
+                       "threshold drop before Arrow; the thresholds fold "
+                       "driver-side from the memoized per-(termid, "
+                       "bucket) bound cache (_bounds_for) — a warm batch "
+                       "adds no scan or job beyond the pruned blob scan "
+                       "itself"),
     ],
     "field_boost_packed": [
         ("FlatMapGroupsInPandas", "hashgroup scorer over build-time field streams"),
@@ -149,9 +148,13 @@ NEGATIVE_CHECKS = {
     ],
     "wand_bucketed_jvmprune": [
         ("Exchange", "the prune adds NO exchange: bucket survival is a "
-                     "pushed literal, the row bound a map literal"),
+                     "pushed literal, the row bound array literals"),
         ("Join", "no per-query bound-frame joins (the pre-r5 form paid "
                  "two broadcasts per execution)"),
+    ],
+    "wand_batch_bucketed_jvmprune": [
+        ("Join", "no threshold-table join: the batch prune is the same "
+                 "literal filter as a single query's"),
     ],
     "syngroups": [
         ("Expand", "no distinct-aggregate expansion"),
@@ -245,7 +248,7 @@ def main() -> None:
     plans["minhash_verify"] = minhash_lsh_pairs(docs_meta.limit(50))
 
     # WAND over the WRITE-TIME bucketed table: no Exchange at all
-    # (jvm_prune off), then the blockmax ub semi-join (jvm_prune on)
+    # (jvm_prune off), then the literal block-max prune (jvm_prune on)
     from open_source_search_engine_spark.operators.segments import (
         save_bucketed,
     )
@@ -261,8 +264,7 @@ def main() -> None:
     plans["wand_bucketed_jvmprune"] = bidx.wand_topk(["join", "filter"], k=10)
     # the multi-query batch over the same store: the driver-side fold
     # of per-(bucket, termid) bounds into row thresholds must land in
-    # the JVM plan as a broadcast join + row filter (sub-block prune
-    # parity with the single-query path, round 5)
+    # the JVM plan as the same literal filter a single query gets
     plans["wand_batch_bucketed_jvmprune"] = bidx.wand_topk_batch(
         {"a": ["join", "filter"], "b": (["join"], "and", ["window"])},
         k=10,

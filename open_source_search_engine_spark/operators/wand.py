@@ -18,15 +18,18 @@ bucket key*. A query is ONE Spark job over a pruned block scan:
 2. **Prune (in the plan)** — per-(termid, bucket) block bounds
    ``max tfnorm(blockmax_tf, blockmin_dl)`` are static store metadata,
    memoized in a driver bound cache (``_bounds_for``). On a
-   disk-backed bucketed store they are folded into the scan as
-   LITERALS: bucket survival (Σ idf·bound ≥ cut, plus AND-mode term
-   presence) is a ``bucket IN (...)`` predicate pushed down to
-   parquet, and the sub-block row test is a map-literal row filter.
-   Past ``_LITERAL_PRUNE_MAX_CELLS`` the same bound is applied by
-   in-plan aggregates + broadcast joins instead
-   (``_prune_buckets_joined``). ``_block_survivors`` is the reference
-   implementation both forms are pinned to. Every skipped bucket or
-   block is provably unable to place a doc in the top-k.
+   disk-backed bucketed store ONE driver fold
+   (``_fold_batch_thresholds``, a single query is the Q = 1 batch)
+   decides, per (bucket, termid), the weakest row bound any query
+   still needs, and ``_apply_prune`` folds it into the scan as
+   LITERALS: surviving buckets become a ``bucket IN (...)`` predicate
+   pushed down to parquet, and the sub-block row test reads its
+   thresholds from bucket-indexed array literals. Past
+   ``_LITERAL_PRUNE_MAX_CELLS`` there is no plan-level prune; the
+   kernel's own check below still skips the decode.
+   ``_block_survivors`` is the reference implementation the fold is
+   pinned to. Every skipped bucket or block is provably unable to
+   place a doc in the top-k.
 3. **Score (workers)** — every query shape (AND/OR/NOT, phrase,
    proximity, density, diversity, field-boosted, and Q-query batches)
    runs ONE bucket kernel, ``_make_batch_scorer``: it re-checks the
@@ -39,14 +42,16 @@ bucket key*. A query is ONE Spark job over a pruned block scan:
    batch.
 
 Scale: the seed reads a few blocks per term; the bound cache holds
-≤ n_buckets values per term, and past the literal cap the bounds stay
-in the plan instead; the pruned scan reads only surviving buckets'
-blobs. Head queries prune little (dense scores) but buckets bound
-memory (the reference's docid-range splits,
+≤ n_buckets values per term, and past the literal cap no bounds are
+fetched at all; the pruned scan reads only surviving buckets' blobs.
+Head queries prune little (dense scores) but buckets bound memory
+(the reference's docid-range splits,
 ``Msg39::m_numDocIdSplits``); tail queries prune almost everything.
 """
 
 from __future__ import annotations
+
+import threading
 
 import numpy as np
 import pandas as pd
@@ -178,7 +183,7 @@ def _bucket_upper_bounds(blocks, idf: dict, with_bytes: bool = False):
     termid) the max block ``idf · tfnorm_ub``, summed over terms —
     the bucket granule ``prune_stats`` reports. The query path takes
     the same per-(bucket, termid) numbers from the driver bound cache
-    (``_survivor_bounds``); both evaluate ``_tfnorm_ub_col``, so a
+    (``_fold_batch_thresholds``); both evaluate ``_tfnorm_ub_col``, so a
     K1/B or bound change cannot reach one side only and make the
     diagnostic report pruning the query path doesn't do.
     ``with_bytes`` additionally carries the blob byte sums the
@@ -210,19 +215,13 @@ def _block_survivors(blocks, idf: dict, cut: float):
 
     This is the REFERENCE implementation (in-plan aggregates over the
     scalar blockmax columns) used by the ``prune_stats`` diagnostic.
-    The query path (``_prune_buckets_jvm``) evaluates the SAME bound
-    formula from the driver bound cache as pushed-down literals — both
-    sides evaluate ``_tfnorm_ub_col`` per (termid, bucket), so the
-    per-term bounds are bit-identical; only the per-bucket Σ can
-    differ by float summation order (last-ulp), and the survivor-set
-    parity is pinned in tests/test_segments_wand.py.
-
-    It is also the query path's size-capped fallback
-    (``_prune_buckets_joined``): past ``_LITERAL_PRUNE_MAX_CELLS``
-    the in-plan aggregates here cost two sub-scans per query, but in
-    that regime (huge bucket fan-out × many terms) they are
-    negligible against the blob scan they prune, and they never move
-    the bound set through the driver.
+    The query path (``_fold_batch_thresholds`` + ``_apply_prune``)
+    evaluates the SAME bound formula from the driver bound cache as
+    pushed-down literals — both sides evaluate ``_tfnorm_ub_col`` per
+    (termid, bucket), so the per-term bounds are bit-identical; only
+    the per-bucket Σ can differ by float summation order (last-ulp),
+    and the survivor-set parity is pinned in
+    tests/test_segments_wand.py.
 
     Returns ``blocks`` + helper columns ``bucket_ub`` / ``nterms`` /
     ``row_keep``; callers filter on bucket survival + row_keep and
@@ -254,19 +253,11 @@ def _block_survivors(blocks, idf: dict, cut: float):
 
 BATCH_SCORE_SCHEMA = "query_id string, docid long, score double"
 
-# Ceiling on the batch-prune bound matrix (buckets × batch terms
-# cells) the driver will collect and fold. ~8 MB of float64 per
-# matrix copy at the cap; past it wand_topk_batch skips the
-# plan-level prune instead of OOMing the driver — with that many
-# live (bucket, term) pairs the min-over-queries threshold decays
-# toward keep-everything and the broadcast would dominate anyway.
-_BATCH_PRUNE_MAX_CELLS = 1_000_000
-
-# |terms| × n_buckets above which the single-query prune stops
-# embedding bounds as literals (a 64k-bucket store would put ~10^5
-# F.lit calls and a multi-MB filter expression in the plan — minutes
-# of driver-side construction and codegen fallback) and uses the
-# broadcast-join form instead, which handles any size.
+# |query terms| × n_buckets above which the plan carries no prune:
+# the thresholds ride in the plan as array literals, and a 1M-cell
+# literal makes a ~40 MB plan string and a ~13 s filter (0.26 s at
+# 256 cells, local[1]). Past the cap the kernel's own per-bucket and
+# per-row check still skips the decode, so results do not change.
 _LITERAL_PRUNE_MAX_CELLS = 8_192
 
 # cell budget for pre-warming the bound cache in _warm_popular: at
@@ -428,15 +419,31 @@ def _spec_tids(q: dict) -> list[int]:
     return list(q["idf"]) + list(q["neg_ids"])
 
 
-def _rank_factors(kind: str, row) -> tuple:
-    """Per-posting rank multipliers of one block row, applied to
-    idf·tfnorm in order: density = densMult·spamMult from the
-    dens/spam streams, diversity = divMult from the divs stream."""
+def _unpack_stream(row, col: str, n: int) -> np.ndarray:
+    """Decode one per-posting int stream of a block row, checking it
+    holds one value per docid: a short stream would otherwise
+    broadcast its first value over the whole block and score every
+    doc with it."""
+    vals = unpack_ints(getattr(row, col))
+    if vals.size != n:
+        raise ValueError(
+            f"corrupt block termid={int(row.termid)} "
+            f"bucket={int(row.bucket)}: {col} decodes {vals.size} "
+            f"values for {n} docids"
+        )
+    return vals
+
+
+def _rank_factors(kind: str, row, n: int) -> tuple:
+    """Per-posting rank multipliers of one block row of ``n`` docs,
+    applied to idf·tfnorm in order: density = densMult·spamMult from
+    the dens/spam streams, diversity = divMult from the divs
+    stream."""
     if kind == "density":
-        dens = unpack_ints(row.dens).astype(np.float64)
-        spam = unpack_ints(row.spam).astype(np.float64)
+        dens = _unpack_stream(row, "dens", n).astype(np.float64)
+        spam = _unpack_stream(row, "spam", n).astype(np.float64)
         return ((8.0 + dens) / 16.0, (16.0 - spam) / 16.0)
-    divs = unpack_ints(row.divs).astype(np.float64)
+    divs = _unpack_stream(row, "divs", n).astype(np.float64)
     return ((8.0 + divs) / 16.0,)
 
 
@@ -569,12 +576,16 @@ def _make_batch_scorer(qspecs: list[dict], k: int):
             if ti not in needed or not keep_rows[i]:
                 continue
             docids = unpack_docids(row.docids).astype(np.int64)
-            tfs_int = unpack_ints(row.tfs).astype(np.int64)
+            tfs_int = _unpack_stream(row, "tfs", docids.size).astype(
+                np.int64
+            )
             tfs = tfs_int.astype(np.float64)
             if ti in sat:
                 tfnorm = (tfs * _K1P1) / (tfs + K1)
             else:
-                dls = unpack_ints(row.dls).astype(np.float64)
+                dls = _unpack_stream(row, "dls", docids.size).astype(
+                    np.float64
+                )
                 tfnorm = (tfs * _K1P1) / (
                     tfs + _K1_1MB + _K1B * dls * inv_avgdl
                 )
@@ -599,7 +610,7 @@ def _make_batch_scorer(qspecs: list[dict], k: int):
                     if kind in ("density", "diversity"):
                         fs = rank_cache.get((kind, i))
                         if fs is None:
-                            fs = _rank_factors(kind, rows[i])
+                            fs = _rank_factors(kind, rows[i], d.size)
                             rank_cache[(kind, i)] = fs
                         for f in fs:
                             part = part * f
@@ -667,6 +678,44 @@ def _make_batch_scorer(qspecs: list[dict], k: int):
     return score_batch
 
 
+class _SharedCache:
+    """Open-handle counts per cached table. Spark's cache manager keeps
+    ONE entry for all semantically equal plans, so two handles over
+    one store share their cached tables: the last handle to release a
+    table unpersists it. Keyed on the application and the plan's
+    ``semanticHash`` — the identity the cache manager matches on — so
+    counts from a stopped session never reach the next one."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._open: dict[tuple, int] = {}
+
+    @staticmethod
+    def _key(df: DataFrame) -> tuple:
+        return (
+            df.sparkSession.sparkContext.applicationId,
+            df.semanticHash(),
+        )
+
+    def acquire(self, df: DataFrame) -> None:
+        key = self._key(df)
+        with self._lock:
+            self._open[key] = self._open.get(key, 0) + 1
+            df.cache()
+
+    def release(self, df: DataFrame) -> None:
+        key = self._key(df)
+        with self._lock:
+            n = self._open.pop(key, 1) - 1
+            if n:
+                self._open[key] = n
+            else:
+                df.unpersist()
+
+
+_cache_handles = _SharedCache()
+
+
 class PackedIndex:
     """Query handle over a SegmentStore (or any packed DataFrame)."""
 
@@ -690,31 +739,35 @@ class PackedIndex:
         # warm shuffle are needed — queries never move blobs at all,
         # the layout the cache path stands in for at 100 TB.
         # disk-backed stores (write-time bucketed table) default to the
-        # JVM-side prune (``_prune_buckets_jvm``: a literal ``bucket
-        # IN`` pushed to the scan plus a row filter, both from the
-        # driver bound cache), so pruned buckets' BLOBS are never read
-        # off disk or shipped across Arrow. The in-memory cache path
-        # keeps the kernel's in-worker prune only — there the blob
-        # column is already resident (BENCH/wand_prune.md measured an
-        # earlier aggregate+broadcast plan prune costing more than it
-        # saved there).
+        # JVM-side prune (``_apply_prune``: a literal ``bucket IN``
+        # pushed to the scan plus an array-literal row filter, both
+        # from the driver bound cache), so pruned buckets' BLOBS are
+        # never read off disk or shipped across Arrow. The in-memory
+        # cache path keeps the kernel's in-worker prune only — there
+        # the blob column is already resident (BENCH/wand_prune.md
+        # measured an earlier aggregate+broadcast plan prune costing
+        # more than it saved there).
         self.jvm_prune = packed is not None
-        # close() unpersists ``packed`` only when this handle cached it
-        self._owns_packed = packed is None
         if packed is not None:
             self.packed = packed
         else:
             n_part = spark.conf.get("spark.sql.shuffle.partitions", "32")
-            self.packed = (
-                store.packed(spark).repartition(int(n_part), "bucket").cache()
+            self.packed = store.packed(spark).repartition(
+                int(n_part), "bucket"
             )
-        self.term_stats = store.term_stats(spark).cache()
+        self.term_stats = store.term_stats(spark)
+        # what close() releases: the tables this handle cached
+        self._cached = [self.term_stats]
+        if packed is None:
+            self._cached.append(self.packed)
+        for df in self._cached:
+            _cache_handles.acquire(df)
         self.n_docs, self.avgdl = store.globals_(spark)
         self._term_cache: dict[str, tuple] = {}
         self._seed_cache: dict[int, list] = {}
         # termid -> {bucket: max tfnorm_ub} — static per store snapshot
         # (like term_stats above; a PackedIndex is bound to the store
-        # state at construction). Feeds _survivor_bounds.
+        # state at construction). Feeds _fold_batch_thresholds.
         self._bound_cache: dict[int, dict[int, float]] = {}
         self._n_buckets: int | None = None
         self._warm_popular()
@@ -724,14 +777,13 @@ class PackedIndex:
         (cache layout only — a disk-backed ``packed`` belongs to the
         caller), the cached ``term_stats`` and the driver-side term,
         seed and bound caches. A long-lived session that opens a
-        handle per store snapshot leaks none of them. Spark's cache
-        manager shares one cache entry between identical plans, so
-        closing one of two open handles over the same store also drops
-        the other's cached tables; that handle still answers, from
-        parquet."""
-        if self._owns_packed:
-            self.packed.unpersist()
-        self.term_stats.unpersist()
+        handle per store snapshot leaks none of them. A cached table
+        another open handle over the same store still shares stays
+        cached until that handle closes too. Closing twice releases
+        once."""
+        for df in self._cached:
+            _cache_handles.release(df)
+        self._cached = []
         self._term_cache.clear()
         self._seed_cache.clear()
         self._bound_cache.clear()
@@ -745,8 +797,8 @@ class PackedIndex:
     def _nb(self) -> int:
         """Bucket fan-out of the store, probed lazily (one scalar
         min/max-stats aggregate over the bucket column, once per
-        index) — sizes the literal-vs-broadcast prune decision and
-        the bound-warm budget."""
+        index) — sizes the prune's literal cap, its bucket-indexed
+        threshold arrays and the bound-warm budget."""
         if self._n_buckets is None:
             mx = self.packed.agg(F.max("bucket")).first()[0]
             self._n_buckets = int(mx) + 1 if mx is not None else 1
@@ -758,20 +810,11 @@ class PackedIndex:
         the same way) — head-term queries then pay zero cold
         round-trips. top_n rows ≈ a few hundred KB regardless of
         corpus size."""
-        ts = (
+        rows = self._fetch_terms(
             self.term_stats.orderBy(F.desc("df"), F.asc("term"))
             .limit(top_n)
             .select("termid", "term", "df")
         )
-        rows = ts.join(
-            self.packed.filter(F.col("bucket") == 0), "termid", "left"
-        ).collect()
-        for r in rows:
-            if self._term_cache.get(r["term"]) is None:
-                self._term_cache[r["term"]] = r
-            seeds = self._seed_cache.setdefault(int(r["termid"]), [])
-            if r["docids"] is not None:
-                seeds.append(r)
         if self.jvm_prune and rows:
             # pre-warm block bounds for the head terms too, so their
             # first pruned query runs ONE job (the query) instead of a
@@ -788,31 +831,35 @@ class PackedIndex:
             if tids:
                 self._bounds_for(tids)
 
+    def _fetch_terms(self, ts: DataFrame) -> list:
+        """Collect term_stats rows ``ts`` (termid, term, df) together
+        with each term's bucket-0 packed blocks (the τ seed sample —
+        see ``_seed_rows``) via a left join, so a cold term pays ONE
+        driver round-trip, not two; fills the term and seed caches."""
+        rows = ts.join(
+            self.packed.filter(F.col("bucket") == 0), "termid", "left"
+        ).collect()
+        for r in rows:
+            if self._term_cache.get(r["term"]) is None:
+                self._term_cache[r["term"]] = r
+            seeds = self._seed_cache.setdefault(int(r["termid"]), [])
+            if r["docids"] is not None:
+                seeds.append(r)
+        return rows
+
     def _term_rows(self, terms: list[str]) -> list:
         """term_stats rows for query terms, memoized across queries —
         the driver-side analogue of the reference's termFreq cache
-        (Posdb::getTermFreq hits RdbMap counts, not the lists).
-
-        The SAME collect also fetches each term's bucket-0 packed
-        blocks (the τ seed sample — see ``_seed_rows``) via a left
-        join, so a cold query pays ONE driver round-trip, not two.
-        """
+        (Posdb::getTermFreq hits RdbMap counts, not the lists)."""
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
-            ts = self.term_stats.filter(F.col("term").isin(missing)).select(
-                "termid", "term", "df"
-            )
-            rows = ts.join(
-                self.packed.filter(F.col("bucket") == 0), "termid", "left"
-            ).collect()
             for t in missing:
-                self._term_cache.setdefault(t, None)
-            for r in rows:
-                if self._term_cache[r["term"]] is None:
-                    self._term_cache[r["term"]] = r
-                seeds = self._seed_cache.setdefault(int(r["termid"]), [])
-                if r["docids"] is not None:
-                    seeds.append(r)
+                self._term_cache[t] = None
+            self._fetch_terms(
+                self.term_stats.filter(F.col("term").isin(missing)).select(
+                    "termid", "term", "df"
+                )
+            )
         return [self._term_cache[t] for t in terms
                 if self._term_cache[t] is not None]
 
@@ -849,33 +896,6 @@ class PackedIndex:
                     float(r["raw_ub"])
                 )
         return {t: self._bound_cache[t] for t in termids}
-
-    def _survivor_bounds(self, idf: dict[int, float]):
-        """Driver-side survivor inputs for ``_prune_buckets_jvm`` —
-        the per-(termid, bucket) bound ``t_ub = idf_t · max
-        tfnorm_ub`` and its per-bucket rollup (Σ t_ub, count of terms
-        present), computed from the driver bound cache (tiny:
-        |terms| × n_buckets values). The per-term bounds are the SAME
-        numbers ``_block_survivors``' in-plan aggregates produce
-        (both sides evaluate ``_tfnorm_ub_col``, and ``idf·max(x) =
-        max(idf·x)`` exactly for the non-negative idf ``_query_spec``
-        enforces); the per-bucket Σ can differ from Spark's
-        partition-order sum by a last ulp — survivor-set parity is
-        pinned in tests/test_segments_wand.py. Returned as plain
-        dicts, so the query plan folds them in as literals instead of
-        broadcast-joining per-query frames."""
-        bounds = self._bounds_for(list(idf))
-        t_ub: dict[int, dict[int, float]] = {}
-        bucket_ub: dict[int, float] = {}
-        nterms: dict[int, int] = {}
-        for t, by_bucket in bounds.items():
-            w = idf[t]
-            for b, raw in by_bucket.items():
-                v = w * raw
-                t_ub.setdefault(t, {})[b] = v
-                bucket_ub[b] = bucket_ub.get(b, 0.0) + v
-                nterms[b] = nterms.get(b, 0) + 1
-        return t_ub, bucket_ub, nterms
 
     def _idf(self, df) -> float:
         """BM25 idf of a body df — the one formula every query shape
@@ -1020,95 +1040,6 @@ class PackedIndex:
             return round(tau, round_to) - 10.0 ** -round_to
         return tau
 
-    def _prune_buckets_jvm(self, ctx: dict) -> DataFrame:
-        """Block-max prune IN THE QUERY PLAN, join-free: both granules
-        are decided from the driver bound cache and folded into the
-        scan as LITERALS. Bucket survival (``Σ t_ub ≥ cut``, AND-mode
-        term-presence) is resolved entirely driver-side and becomes a
-        ``bucket IN (...)`` predicate that pushes down to the parquet
-        scan — a pruned bucket's files are skipped by row-group stats,
-        so its docids/tfs/dls bytes are never read at all (the Ding &
-        Suel skip realized as I/O pruning). The sub-block row test
-        (``row_ub + (bucket_ub − t_ub) ≥ cut``) keeps its per-row half
-        in-plan but takes the per-(termid, bucket) constants from a
-        nested map literal, so the whole prune is ONE codegen'd filter
-        stage: zero joins, zero Exchanges, zero per-query frames
-        (the broadcast-join form this replaces cost two exchanges per
-        query — the dominant small-corpus overhead after the aggregate
-        sub-scans were removed). ``prune_stats`` keeps the in-plan
-        ``_block_survivors`` aggregates as the reference
-        implementation; parity between the two is pinned in
-        tests/test_segments_wand.py. The cut is the kind-adjusted
-        plain-bound cut (``_plain_cut``): the bound cache holds plain
-        BM25 block bounds."""
-        blocks, idf, cut = ctx["blocks"], ctx["idf"], _plain_cut(ctx)
-        if cut == float("-inf"):
-            return blocks
-        if len(idf) * self._nb() > _LITERAL_PRUNE_MAX_CELLS:
-            return self._prune_buckets_joined(ctx)
-        t_ub, bucket_ub, nterms = self._survivor_bounds(idf)
-        need = len(ctx["required"]) if ctx.get("required") else 0
-        surv = sorted(
-            b for b, ub in bucket_ub.items()
-            if ub >= cut and (not need or nterms[b] == need)
-        )
-        # buckets with positive-term rows that fail the bound — or, for
-        # neg-term rows, buckets with NO positive rows at all (absent
-        # from bucket_ub; such a bucket can't produce a match) — drop
-        # at the scan via the isin pushdown.
-        if not surv:
-            return blocks.filter(F.lit(False))
-        pruned = blocks.filter(F.col("bucket").isin(surv))
-        surv_set = set(surv)
-        # rest(t, b) = bucket_ub[b] − t_ub[t][b]; lookups missing from
-        # the map (neg-term rows) yield NULL → keep unconditionally,
-        # matching _block_survivors' t_ub-isNull semantics.
-        rest_entries = [
-            x
-            for t, by_b in t_ub.items()
-            # a term whose buckets all failed survival has no rows
-            # left after the isin — skip it (an empty create_map()
-            # would type-conflict with the int→double inner maps)
-            if any(b in surv_set for b in by_b)
-            for x in (
-                F.lit(t),
-                F.create_map(*[
-                    y
-                    for b, v in by_b.items()
-                    if b in surv_set
-                    for y in (F.lit(b), F.lit(bucket_ub[b] - v))
-                ]),
-            )
-        ]
-        rest = F.create_map(*rest_entries)[F.col("termid")][
-            F.col("bucket")
-        ]
-        row_ub = _idf_map_expr(idf)[F.col("termid")] * _tfnorm_ub_col()
-        return pruned.filter(
-            rest.isNull() | (row_ub + rest >= F.lit(cut))
-        )
-
-    def _prune_buckets_joined(self, ctx: dict) -> DataFrame:
-        """Size-capped fallback for ``_prune_buckets_jvm``: past
-        ``_LITERAL_PRUNE_MAX_CELLS`` (|terms| × n_buckets) a literal
-        plan would mean ~10^5 ``F.lit`` py4j calls and a multi-MB
-        filter expression, and shipping the bound set through the
-        driver cache would be a memory hazard of its own — so apply
-        ``_block_survivors``' in-plan aggregates + broadcast joins
-        instead (two scalar sub-scans per query, negligible against
-        the blob scan they prune at that bucket fan-out). Same bound
-        formula, same survivor set."""
-        blocks, idf, cut = ctx["blocks"], ctx["idf"], _plain_cut(ctx)
-        flagged = _block_survivors(blocks, idf, cut)
-        keep = (F.col("bucket_ub") >= F.lit(cut)) & F.col("row_keep")
-        if ctx.get("required"):
-            keep = keep & (F.col("nterms") == len(ctx["required"]))
-        # neg-term rows carry a null bucket_ub only when their bucket
-        # has NO positive-term rows — such a bucket can't match, so
-        # null-kills-it is right; inside a live bucket they survive
-        # via row_keep.
-        return flagged.filter(keep).drop("bucket_ub", "nterms", "row_keep")
-
     def wand_topk(
         self,
         terms: list[str],
@@ -1133,10 +1064,11 @@ class PackedIndex:
     ) -> DataFrame:
         """The single-query plan — ONE action mirroring the relational
         path's shape: termid prune at the scan → literal JVM prune
-        (disk-backed stores) → the kernel on one spec per bucket →
-        TakeOrderedAndProject. No shuffle: the cache is
-        hash-partitioned by bucket (and a write-time bucketed table's
-        scan reports the same partitioning), so FlatMapGroupsInPandas's
+        (disk-backed stores: ``_apply_prune`` with one spec) → the
+        kernel on one spec per bucket → TakeOrderedAndProject. No
+        shuffle: the cache is hash-partitioned by bucket (and a
+        write-time bucketed table's scan reports the same
+        partitioning), so FlatMapGroupsInPandas's
         ClusteredDistribution is already satisfied. On the cache
         layout the kernel's own per-bucket / per-row bound check is
         the prune — skipped rows never decode a blob. Field-boosted
@@ -1151,10 +1083,10 @@ class PackedIndex:
                 "docid string, score double"
                 if label_map is not None else SCORE_SCHEMA,
             )
-        blocks = ctx["blocks"]
-        if self.jvm_prune and ctx["kind"] != "field":
-            blocks = self._prune_buckets_jvm(ctx)
         spec = {key: v for key, v in ctx.items() if key != "blocks"}
+        blocks = ctx["blocks"]
+        if self.jvm_prune and spec["kind"] != "field":
+            blocks = self._apply_prune(blocks, [spec])
         result = (
             _project_scorer_cols(blocks, [spec["kind"]])
             .groupBy("bucket")
@@ -1177,135 +1109,118 @@ class PackedIndex:
     def _fold_batch_thresholds(
         self, idf_all: dict[int, float], qspecs: list
     ):
-        """Fold per-(bucket, termid) bounds into the weakest row-level
-        threshold any batch query still needs — the multi-query form
-        of ``_block_survivors``'s row bound, as a pandas DataFrame
-        (bucket, termid, thr) ready to broadcast; thr is NA where the
-        row must be kept unconditionally (neg terms, no-seed queries).
-        Bounds come from the driver cache (``_bounds_for``) — cold
-        batch terms pay one shared aggregate collect; a warm batch
-        builds the matrix without touching the cluster.
+        """THE block-max prune decision for Q query specs (a single
+        query is Q = 1): per (bucket, termid), the weakest row-level
+        bound any query still needs — the multi-query form of
+        ``_block_survivors``' row bound, folded from the driver bound
+        cache (``_bounds_for``; cold terms pay one shared aggregate
+        collect, warm ones never touch the cluster). ``idf_all`` maps
+        every scored termid to its (term-global) weighted idf.
 
-        Returns None when the bound matrix exceeds
-        ``_BATCH_PRUNE_MAX_CELLS`` (caller skips the plan-level prune:
-        a thr table that size couldn't broadcast, and with that many
-        live (bucket, term) pairs the min-over-queries threshold
-        decays toward keep-everything anyway) and an EMPTY frame when
-        no bucket can serve any query (caller returns no rows).
+        Returns None — the plan then carries no prune — when no query
+        has a seed cut (there is nothing to prune against, and cold
+        terms' bounds would cost a collect), or past
+        ``_LITERAL_PRUNE_MAX_CELLS`` (|terms| × n_buckets, checked
+        BEFORE the bounds are fetched: the cache collect itself is
+        that many rows). Otherwise ``(tids, thr)``: the scored and
+        negated termids, and an n_buckets × |tids| array where a row
+        of term ``tids[j]`` in bucket b survives iff its
+        ``idf·tfnorm_ub ≥ thr[b, j]`` (−inf: keep unconditionally —
+        neg terms, no-seed queries; +inf: no surviving query needs
+        it). A bucket whose cells are all +inf can serve no query.
 
-        The fold is vectorized per QUERY over the dense buckets ×
-        terms matrix — O(Σ_q buckets·|q|) numpy work, never a Python
-        loop over buckets (a 64k-bucket × 2000-query batch would be
-        billions of interpreted iterations)."""
-        ninf = float("-inf")
-        # gate on the WORST-CASE cell count BEFORE _bounds_for runs:
-        # the cache collect itself materializes up to |terms| ×
-        # n_buckets rows driver-side (and retains them), so checking
-        # len(rows) after the fact would OOM the driver first on the
-        # wide batches the cap exists for.
-        if len(idf_all) * self._nb() > _BATCH_PRUNE_MAX_CELLS:
+        Vectorized per QUERY over the dense buckets × terms matrix:
+        O(Σ_q buckets·|q|) numpy work, no Python loop over buckets."""
+        if all(_plain_cut(q) == float("-inf") for q in qspecs):
             return None
-        bounds = self._bounds_for(list(idf_all))
-        rows = [
-            (b, t, idf_all[t] * raw)
-            for t, by_bucket in bounds.items()
-            for b, raw in by_bucket.items()
-        ]
-        if len(rows) > _BATCH_PRUNE_MAX_CELLS:
+        nb = self._nb()
+        if len(idf_all) * nb > _LITERAL_PRUNE_MAX_CELLS:
             return None
-        bpdf = pd.DataFrame(rows, columns=["bucket", "termid", "t_ub"])
-        if bpdf.empty:
-            return bpdf.assign(thr=[])[["bucket", "termid", "thr"]]
-        # Check the DENSE size before materializing the pivot: a sparse
-        # bound table (row count under the cap) can still span a
-        # buckets × terms rectangle far over it, and pivot() allocates
-        # that rectangle NaN-filled — the exact driver OOM the cap
-        # exists to prevent.
-        nb = bpdf["bucket"].nunique()
-        nt = bpdf["termid"].nunique()
-        if nb * nt > _BATCH_PRUNE_MAX_CELLS:
-            return None
-        piv = bpdf.pivot(index="bucket", columns="termid", values="t_ub")
-        nb, nt = piv.shape
-        buckets = piv.index.to_numpy(np.int64)
-        tids = piv.columns.to_numpy(np.int64)
-        M = piv.to_numpy(np.float64)  # NaN where (bucket, term) absent
+        tids = list(dict.fromkeys(
+            [*idf_all, *(t for q in qspecs for t in q["neg_ids"])]
+        ))
+        col_of = {t: j for j, t in enumerate(tids)}
+        # M[b, j] = t_ub = idf·max tfnorm_ub; NaN where term j has no
+        # block in bucket b. M already carries idf — multiplying again
+        # (idf²) would understate the bound for idf < 1 stopwords and
+        # prune buckets holding true top-k docs.
+        M = np.full((nb, len(tids)), np.nan)
+        for t, by_bucket in self._bounds_for(list(idf_all)).items():
+            M[list(by_bucket), col_of[t]] = idf_all[t] * np.fromiter(
+                by_bucket.values(), np.float64, len(by_bucket)
+            )
         present = ~np.isnan(M)
-        col_of = {int(t): j for j, t in enumerate(tids)}
-        # thr[i, j]: min over surviving queries of the row bound that
-        # could still reach that query's cut (same bound as
-        # _block_survivors' row_keep: row_ub ≥ cut − (bucket_ub −
-        # t_ub); the max row per (b, t) always survives its own
-        # threshold, so every surviving query still sees all its
-        # termids). +inf = untouched, −inf = keep unconditionally.
-        thr = np.full((nb, nt), np.inf)
-        touched = np.zeros((nb, nt), dtype=bool)
-        # neg termids absent from idf_all have no matrix column; their
-        # keep-rows are accumulated per live bucket separately
-        neg_extra: dict[int, np.ndarray] = {}
+        thr = np.full(M.shape, np.inf)
         for q in qspecs:
-            idf, required, neg = q["idf"], q["required"], q["neg_ids"]
-            # per-kind bound adjustment, shared with the kernel and
-            # the single-query literal prune
-            cut = _plain_cut(q)
-            cols = [col_of[t] for t in idf if t in col_of]
-            if not cols:
-                continue
-            if required:
-                rcols = [col_of[t] for t in required if t in col_of]
-                if len(rcols) < len(required):
-                    continue  # a required term has no blocks at all
-                alive = present[:, rcols].all(axis=1)
-            else:
-                alive = np.ones(nb, dtype=bool)
+            cols = [col_of[t] for t in q["idf"]]
+            req = [col_of[t] for t in q["required"]]
+            # AND buckets need every required term, OR buckets any term
+            alive = (
+                present[:, req].all(axis=1) if req
+                else present[:, cols].any(axis=1)
+            )
             sub = M[:, cols]
-            # bounds already carry idf (t_ub = idf·tfnorm_ub from
-            # _bucket_term_bounds) — do NOT multiply idf again: idf²
-            # UNDERSTATES the bound for idf<1 terms (df ≳ 0.37·N
-            # stopwords) and would prune buckets holding true top-k
-            bucket_ub = np.nansum(sub, axis=1)
-            if cut > ninf:
-                alive = alive & (bucket_ub >= cut)
-            if not alive.any():
-                continue
-            ix = np.ix_(alive, cols)
-            if cut == ninf:
-                need = np.full((int(alive.sum()), len(cols)), -np.inf)
+            # per-kind bound adjustment, shared with the kernel
+            cut = _plain_cut(q)
+            if cut > float("-inf"):
+                bucket_ub = np.nansum(sub, axis=1)
+                alive &= bucket_ub >= cut
+                # row_ub + (bucket_ub − t_ub) ≥ cut, solved for row_ub;
+                # the max row per (b, t) always meets its own
+                # threshold, so a live query keeps all its termids
+                need = cut - (bucket_ub[:, None] - sub)
             else:
-                need = cut - (bucket_ub[alive, None] - sub[alive])
-                need = np.where(np.isnan(need), np.inf, need)
-            pm = present[ix]
-            thr[ix] = np.where(pm, np.minimum(thr[ix], need), thr[ix])
-            touched[ix] |= pm
-            for t in neg:
+                need = np.full(sub.shape, -np.inf)
+            need = np.where(present[:, cols] & alive[:, None], need, np.inf)
+            thr[:, cols] = np.minimum(thr[:, cols], need)
+            for t in q["neg_ids"]:
                 # neg docid sets must stay complete for the
                 # anti-filter wherever q is evaluated
-                j = col_of.get(t)
-                if j is not None:
-                    thr[alive, j] = -np.inf
-                    touched[alive, j] = True
-                else:
-                    m = neg_extra.get(t)
-                    neg_extra[t] = alive | m if m is not None else alive
-        bi, tj = np.nonzero(touched)
-        vals = thr[bi, tj]
-        out_b = [buckets[bi].astype(np.int32)]
-        out_t = [tids[tj]]
-        out_v = [np.where(np.isneginf(vals), np.nan, vals)]
-        for t, mask in neg_extra.items():
-            nbm = int(mask.sum())
-            out_b.append(buckets[mask].astype(np.int32))
-            out_t.append(np.full(nbm, t, dtype=np.int64))
-            out_v.append(np.full(nbm, np.nan))
-        return pd.DataFrame(
-            {
-                "bucket": np.concatenate(out_b),
-                "termid": np.concatenate(out_t),
-                # nullable Float64: NaN must reach Spark as NULL (the
-                # plan filter tests isNull; a float NaN would not be)
-                "thr": pd.array(np.concatenate(out_v), dtype="Float64"),
-            }
-        )
+                thr[alive, col_of[t]] = -np.inf
+        return tids, thr
+
+    def _apply_prune(self, blocks: DataFrame, qspecs: list) -> DataFrame:
+        """Fold Q query specs' prune (``_fold_batch_thresholds``) into
+        the scan of ``blocks`` as LITERALS — the one prune applier of
+        the single-query and batch plans: surviving buckets become a
+        ``bucket IN (...)`` predicate that pushes down to the parquet
+        scan (a pruned bucket's files are deselected, so its blobs are
+        never read — the Ding & Suel skip realized as I/O pruning), and
+        the sub-block row test reads its per-(termid, bucket)
+        thresholds from one bucket-indexed array literal per termid.
+        One filter stage: zero joins, zero Exchanges, and a plan whose
+        py4j call count does not grow with the bucket count (an array
+        literal's elements still cross as one py4j array command
+        each). A row dropped here is one the kernel's own per-bucket /
+        per-row check would skip too, so results never depend on
+        whether the plan prunes."""
+        idf_all: dict[int, float] = {}
+        for q in qspecs:
+            # term-global: only a single query (Q = 1) carries weights
+            idf_all.update(q["idf"])
+        fold = self._fold_batch_thresholds(idf_all, qspecs)
+        if fold is None:
+            return blocks
+        tids, thr = fold
+        surv = np.flatnonzero((thr < np.inf).any(axis=1))
+        if not surv.size:
+            return blocks.filter(F.lit(False))
+        ub = _tfnorm_ub_col()
+        at_bucket = F.col("bucket") + 1
+        keep = None
+        for j, t in enumerate(tids):
+            is_t = F.col("termid") == t
+            # a neg-only termid scores 0: ≥ −inf keeps, ≥ +inf drops
+            row_ok = F.lit(idf_all.get(t, 0.0)) * ub >= F.element_at(
+                F.lit(thr[:, j]), at_bucket
+            )
+            keep = (
+                F.when(is_t, row_ok) if keep is None
+                else keep.when(is_t, row_ok)
+            )
+        return blocks.filter(
+            F.expr(f"bucket IN ({', '.join(map(str, surv))})")
+        ).filter(keep)
 
     def wand_topk_batch(
         self,
@@ -1340,18 +1255,15 @@ class PackedIndex:
         replaces Q TakeOrderedAndProjects.
 
         Scale shape: Q queries' termids union into ONE scan filter;
-        on a disk-backed bucketed store the JVM prune generalizes to
-        SUB-BLOCK granularity by collecting the per-(bucket, termid)
-        scalar bounds once (buckets × |terms| rows, Arrow transfer,
-        vectorized numpy fold, capped at _BATCH_PRUNE_MAX_CELLS —
-        past the cap the plan filter is skipped, see
-        ``_fold_batch_thresholds``) and folding them driver-side into
-        the weakest row-level threshold any query still needs per
-        (bucket, termid) — a block row below every interested query's
-        threshold is dropped in the JVM plan and never crosses Arrow
-        into the Python scorer (same row-level guarantee as the
-        single-query ``_block_survivors`` path; the bound aggregate
-        itself reads only scalar columns).
+        on a disk-backed bucketed store the single-query prune
+        (``_apply_prune``) takes all Q specs: the driver fold keeps,
+        per (bucket, termid), the weakest row-level threshold any
+        query still needs, so a block row below every interested
+        query's threshold is dropped in the plan and never crosses
+        Arrow into the Python scorer (same row-level guarantee as a
+        single query; past ``_LITERAL_PRUNE_MAX_CELLS`` the plan
+        carries no prune and the kernel's per-query check skips the
+        decode instead).
         """
         from pyspark.sql.window import Window
 
@@ -1415,64 +1327,14 @@ class PackedIndex:
             qspecs.append(dict(spec, qid=qid))
         if not qspecs:
             return self.spark.createDataFrame([], BATCH_SCORE_SCHEMA)
-        idf_all: dict[int, float] = {}
-        for q in qspecs:
-            idf_all.update(q["idf"])  # idf is term-global (no weights here)
-        all_tids = sorted(
-            set(idf_all)
-            | {t for q in qspecs for t in q["neg_ids"]}
+        blocks = self._blocks(
+            sorted({t for q in qspecs for t in _spec_tids(q)})
         )
-        blocks = self._blocks(all_tids)
-
         if self.jvm_prune:
-            # batch form of _block_survivors: ONE scalar aggregate
-            # over (bucket, termid) bounds (buckets × |batch terms|
-            # rows), then a driver-side fold into the weakest
-            # row-level threshold any query still needs per (bucket,
-            # termid). Rows below EVERY interested query's threshold
-            # are dropped by a broadcast inner join + filter in the
-            # JVM plan, so — exactly like the single-query path — a
-            # pruned sub-block's blob bytes never cross Arrow into
-            # the batch scorer (which would re-derive the same skip
-            # per query and drop them at decode time anyway; see
-            # keep_rows in _make_batch_scorer — that check stays,
-            # making the plan-level filter a pure transfer/decode
-            # win, not a semantics change).
-            #
-            # The fold's working set is the buckets × terms bound
-            # matrix, which grows with BOTH corpus size and batch
-            # width; past _BATCH_PRUNE_MAX_CELLS the prune is skipped
-            # outright rather than collected: with thousands of
-            # queries nearly every block serves SOMEONE (thr = min
-            # over queries decays toward keep-everything), so the
-            # plan filter stops paying for its own broadcast — and a
-            # thr table that size could not broadcast anyway. The
-            # in-scorer per-query prune still applies either way.
-            thr_pdf = self._fold_batch_thresholds(idf_all, qspecs)
-            if thr_pdf is not None and thr_pdf.empty:
-                return self.spark.createDataFrame([], BATCH_SCORE_SCHEMA)
-            if thr_pdf is not None:
-                thr_df = self.spark.createDataFrame(
-                    thr_pdf, schema="bucket int, termid long, thr double"
-                )
-                row_ub = (
-                    _idf_map_expr(idf_all)[F.col("termid")]
-                    * _tfnorm_ub_col()
-                )
-                # inner join doubles as the bucket prune (thr only
-                # holds surviving buckets) AND drops terms no
-                # surviving query needs in that bucket; NULL thr (neg
-                # rows — row_ub is NULL there too — and no-seed
-                # queries) keeps the row
-                blocks = (
-                    blocks.join(
-                        F.broadcast(thr_df), ["bucket", "termid"], "inner"
-                    )
-                    .filter(
-                        F.col("thr").isNull() | (row_ub >= F.col("thr"))
-                    )
-                    .drop("thr")
-                )
+            # the single-query prune with Q specs: a block row below
+            # EVERY interested query's threshold is dropped in the
+            # plan and never crosses Arrow into the batch scorer
+            blocks = self._apply_prune(blocks, qspecs)
 
         result = (
             # positions ride along only when some query gathers them
@@ -1639,8 +1501,8 @@ class PackedIndex:
         and the JVM row filter actually skip at). Pure-JVM aggregates
         over the scalar blockmax columns via ``_block_survivors`` —
         the reference implementation of the bound the query path's
-        literal prune (``_prune_buckets_jvm``) evaluates from the
-        driver bound cache. Both evaluate ``_tfnorm_ub_col``, and
+        literal prune (``_apply_prune``) evaluates from the driver
+        bound cache. Both evaluate ``_tfnorm_ub_col``, and
         survivor-set parity is pinned in tests/test_segments_wand.py,
         so the diagnostic can't drift from the plan."""
         ctx = self._query_ctx(terms, k, mode, neg_terms)

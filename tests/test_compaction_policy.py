@@ -263,3 +263,57 @@ def test_crash_between_write_and_manifest_is_invisible(
     name = maybe_compact(spark, store, min_files_to_merge=4)
     assert name == "compact-000000"  # retry reuses the generation
     assert _exploded(spark, store) == before
+
+
+def test_open_handles_survive_compaction(spark, tmp_path_factory):
+    """A cache-layout handle and a bucketed handle opened on a store
+    keep answering after ``maybe_compact`` retires (and deletes) the
+    segments they were opened over: each query returns the top-k it
+    returned before compaction, or raises — never a wrong top-k."""
+    from open_source_search_engine_spark.operators.segments import (
+        save_bucketed,
+    )
+
+    root = str(tmp_path_factory.mktemp("idx_open_compact"))
+    store = build_segments(
+        spark, _docs(spark), SegmentStore(root), n_segments=4, n_buckets=4
+    )
+    name = save_bucketed(spark, store, "packed_open_compact_t", root + "/t")
+    queries = [
+        (["join", "filter"], "and", None),
+        (["join", "window"], "or", None),
+        (["join"], "and", ["filter"]),
+    ]
+    try:
+        cached = PackedIndex(spark, store)
+        bucketed = PackedIndex(spark, store, packed=spark.table(name))
+
+        def answers(pidx):
+            out = []
+            for terms, mode, neg in queries:
+                try:
+                    out.append([
+                        tuple(r)
+                        for r in pidx.wand_topk(
+                            terms, k=5, mode=mode, neg_terms=neg
+                        ).collect()
+                    ])
+                except Exception as exc:  # a raise is an allowed outcome
+                    out.append(type(exc))
+            return out
+
+        before = {"cached": answers(cached), "bucketed": answers(bucketed)}
+        assert all(isinstance(a, list) and a for v in before.values()
+                   for a in v)
+        assert maybe_compact(spark, store, min_files_to_merge=4)
+        assert len(_live_segments(spark, store)) == 1
+        for label, pidx in (("cached", cached), ("bucketed", bucketed)):
+            for want, got in zip(before[label], answers(pidx)):
+                # a list is an answer and must match; a type is a raise
+                assert got == want or isinstance(got, type), (
+                    label, want, got,
+                )
+        cached.close()
+        bucketed.close()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -380,7 +380,9 @@ def test_packed_index_close_releases_caches(spark, tmp_path_factory):
     """``PackedIndex.close()`` (also via ``with``) unpersists the
     handle's cached ``packed`` and ``term_stats`` and clears its
     driver-side caches: open/close cycles leave the session's
-    persisted-RDD count where it started."""
+    persisted-RDD count where it started. Two handles over one store
+    share Spark's cache entries, so closing one leaves the other's
+    tables cached until it closes too."""
     root = str(tmp_path_factory.mktemp("idx_close"))
     st = build_segments(
         spark, _docs(spark), SegmentStore(root), n_segments=1, n_buckets=4
@@ -395,6 +397,45 @@ def test_packed_index_close_releases_caches(spark, tmp_path_factory):
             pidx._term_cache or pidx._seed_cache or pidx._bound_cache
         )
     assert jsc.getPersistentRDDs().size() == before
+    a, b = PackedIndex(spark, st), PackedIndex(spark, st)
+    want = [tuple(r) for r in b.wand_topk(["join", "filter"], k=5).collect()]
+    shared = jsc.getPersistentRDDs().size()
+    assert shared > before
+    a.close()
+    a.close()  # a second close releases nothing more
+    assert jsc.getPersistentRDDs().size() == shared
+    assert [
+        tuple(r) for r in b.wand_topk(["join", "filter"], k=5).collect()
+    ] == want
+    b.close()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_corrupt_blob_raises(spark, store):
+    """A block whose tfs stream decodes to fewer values than its
+    docids must fail loudly, naming the block — numpy would otherwise
+    broadcast the first tf over every doc of the block and score them
+    all with it."""
+    import pandas as pd
+
+    from open_source_search_engine_spark.functions.varbyte import pack_ints
+    from open_source_search_engine_spark.operators.wand import (
+        _make_batch_scorer,
+    )
+
+    pidx = PackedIndex(spark, store)
+    spec = pidx._query_spec(["join"], k=5)
+    (tid,) = spec["idf"]
+    row = next(
+        r.asDict() for r in pidx._seed_rows([tid]) if r["n"] > 1
+    )
+    spec = dict(spec, cut=float("-inf"))
+    pdf = pd.DataFrame([row]).assign(inv_avgdl=1.0 / pidx.avgdl)
+    assert len(_make_batch_scorer([spec], 5)(pdf)) > 0
+    bad = pdf.assign(tfs=[pack_ints(unpack_ints(row["tfs"])[:1])])
+    with pytest.raises(ValueError, match=f"termid={tid} bucket=0"):
+        _make_batch_scorer([spec], 5)(bad)
+    pidx.close()
 
 
 def test_compaction_preserves_positions(spark, pos_store, tmp_path_factory):
@@ -569,9 +610,9 @@ def test_bucketed_table_no_shuffle(spark, store, tmp_path_factory):
 def test_prune_literal_matches_block_survivors(
     spark, store, tmp_path_factory
 ):
-    """The join-free literal prune (``_prune_buckets_jvm``:
-    driver-side bucket survival pushed into the scan + map-literal row
-    test) keeps EXACTLY the rows the reference in-plan implementation
+    """The literal prune at Q = 1 (``_apply_prune`` with one spec:
+    driver-side bucket survival pushed into the scan + array-literal
+    row test) keeps EXACTLY the rows the reference in-plan implementation
     (``_block_survivors`` — the ``prune_stats`` path) keeps, across
     AND / OR / NOT shapes — the shared-bound-formula discipline,
     pinned so the two cannot drift."""
@@ -605,7 +646,7 @@ def test_prune_literal_matches_block_survivors(
             assert cut > float("-inf"), (terms, mode, neg)
             got = {
                 tuple(r)
-                for r in pidx._prune_buckets_jvm(ctx)
+                for r in pidx._apply_prune(ctx["blocks"], [ctx])
                 .select(*key)
                 .collect()
             }
@@ -634,7 +675,7 @@ def test_prune_literal_matches_block_survivors(
             ctx["cut"] = c
             got = {
                 tuple(r)
-                for r in pidx._prune_buckets_jvm(ctx)
+                for r in pidx._apply_prune(ctx["blocks"], [ctx])
                 .select(*key)
                 .collect()
             }
@@ -653,11 +694,64 @@ def test_prune_literal_matches_block_survivors(
         spark.sql("DROP TABLE IF EXISTS packed_parity_t")
 
 
+def test_prune_plan_cost_flat_in_buckets(spark, tmp_path_factory):
+    """The literal prune's plan construction costs the same number of
+    py4j calls at 2 and 16 buckets: its thresholds ride in one array
+    literal per term and its bucket survival in one parsed ``IN``
+    list, so a wider bucket fan-out adds no per-bucket JVM call. Both
+    pruned results equal the relational top-k."""
+    from open_source_search_engine_spark.operators.segments import (
+        save_bucketed,
+    )
+
+    idx = cached_index(spark, SF_SMOKE)
+    terms = ["join", "filter"]
+    want = [tuple(r) for r in bm25_topk(idx, terms, k=3).collect()]
+    client = spark.sparkContext._gateway._gateway_client
+    counts = {}
+    for nb in (2, 16):
+        root = str(tmp_path_factory.mktemp(f"idx_cost{nb}"))
+        st = build_segments(
+            spark, _docs(spark), SegmentStore(root),
+            n_segments=1, n_buckets=nb,
+        )
+        name = f"packed_cost{nb}_t"
+        save_bucketed(spark, st, name, root + "/t")
+        try:
+            with PackedIndex(spark, st, packed=spark.table(name)) as pidx:
+                # warm the term, seed and bound caches first, so only
+                # the plan construction is counted
+                assert [
+                    tuple(r) for r in pidx.wand_topk(terms, k=3).collect()
+                ] == want
+                assert pidx._query_spec(terms, k=3)["cut"] > float("-inf")
+                calls = []
+                orig = client.send_command
+
+                def counting(command, *a, **kw):
+                    if command.startswith("c"):  # a py4j method call
+                        calls.append(command)
+                    return orig(command, *a, **kw)
+
+                client.send_command = counting
+                try:
+                    res = pidx.wand_topk(terms, k=3)
+                finally:
+                    client.send_command = orig
+                plan = res._jdf.queryExecution().executedPlan().toString()
+                assert "In(bucket" in plan, (nb, plan)
+                counts[nb] = len(calls)
+                assert [tuple(r) for r in res.collect()] == want
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+    assert counts[2] == counts[16], counts
+
+
 def test_prune_fallback_and_guards(
     spark, store, tmp_path_factory, monkeypatch
 ):
-    """(a) Past ``_LITERAL_PRUNE_MAX_CELLS`` the prune falls back to
-    the in-plan broadcast-join form with identical results; (b)
+    """(a) Past ``_LITERAL_PRUNE_MAX_CELLS`` the plan carries no
+    prune and the results are identical; (b)
     non-positive term weights are rejected before they can flip the
     block-max bound's sign; (c) ``_warm_popular`` pre-warms the bound
     cache on disk-backed stores so a head-term query's first pruned
@@ -679,12 +773,17 @@ def test_prune_fallback_and_guards(
             tuple(r)
             for r in pidx.wand_topk(["join", "filter"], k=10).collect()
         ]
-        # (a) force the fallback; results identical, plan carries the
-        # broadcast join instead of oversized literals
+        # (a) past the cap: no bucket IN, no threshold literals, no
+        # join — the kernel's own check is the prune; results identical
+        pruned = pidx.wand_topk(["join", "filter"], k=10)
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+        assert "element_at" in plan, plan
         monkeypatch.setattr(W, "_LITERAL_PRUNE_MAX_CELLS", 0)
         res = pidx.wand_topk(["join", "filter"], k=10)
         plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan
+        assert "element_at" not in plan, plan
+        assert "In(bucket" not in plan, plan
+        assert "Join" not in plan, plan
         assert [tuple(r) for r in res.collect()] == want
         # (b) non-positive weights rejected
         with pytest.raises(ValueError, match="positive"):

@@ -145,10 +145,9 @@ def test_batch_jvm_prune_is_subblock_in_plan(
     """The disk-backed batch prune must be ROW-level in the JVM plan
     (round-5: parity with the single-query _block_survivors path), not
     bucket-level only: pruned sub-blocks' blobs must never cross Arrow
-    into the batch scorer. Pinned by plan shape — the per-(bucket,
-    termid) threshold map is broadcast-joined and the row filter
-    references it — plus the bound aggregate reading only scalar
-    columns (the blobs of pruned rows stay on disk)."""
+    into the batch scorer. Pinned by plan shape — the row filter
+    reads its per-(bucket, termid) thresholds from array literals,
+    with no join — plus the main scan keeping its termid pushdown."""
     out = str(tmp_path_factory.mktemp("idx_batch_plan"))
     name = save_bucketed(spark, store, "batch_plan_bt", path=out)
     try:
@@ -159,13 +158,13 @@ def test_batch_jvm_prune_is_subblock_in_plan(
             k=5,
         )
         plan = batch._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan
-        assert "isnull(thr" in plan, plan  # NULL-thr keep-always rows
+        assert "Join" not in plan, plan
+        assert "element_at" in plan, plan  # the row-level filter
         # the bound aggregate itself runs as a separate eager job
         # (driver-side fold), so its scalar-only ReadSchema property
         # is pinned on the shared _bucket_term_bounds path by
         # test_segments_wand's single-query plan test; here assert
-        # the main scan still gets the termid pushdown under the join
+        # the main scan still gets the termid pushdown
         scans = plan.split("FileScan parquet")[1:]
         assert scans and any(
             "termid" in seg.split("PushedFilters")[1][:200]
@@ -178,11 +177,11 @@ def test_batch_jvm_prune_is_subblock_in_plan(
 
 def test_fold_checks_dense_size_before_pivoting(spark, store, monkeypatch):
     """Round-5 review fix: a SPARSE bound table (row count under
-    _BATCH_PRUNE_MAX_CELLS) can still span a buckets × termids
-    rectangle far over it, and ``pivot()`` materializes that dense
-    NaN-filled rectangle — the driver OOM the cap exists to prevent.
-    The nunique-product check must run BEFORE the pivot; pinned by
-    making any pivot call an assertion failure."""
+    _LITERAL_PRUNE_MAX_CELLS) can still span a buckets × termids
+    rectangle far over it, and materializing that dense NaN-filled
+    rectangle is the driver OOM the cap exists to prevent. The cap
+    (|terms| × n_buckets) must be checked BEFORE any bound matrix is
+    built; pinned by making any pivot call an assertion failure."""
     import pandas as pd
 
     from open_source_search_engine_spark.operators import wand as W
@@ -192,14 +191,17 @@ def test_fold_checks_dense_size_before_pivoting(spark, store, monkeypatch):
     # rows ≤ cap < nb·nt
     sparse = {1: {0: 1.0, 1: 1.0}, 2: {1: 1.0}, 3: {0: 1.0, 2: 1.0}}
     monkeypatch.setattr(pidx, "_bounds_for", lambda tids: sparse)
-    monkeypatch.setattr(W, "_BATCH_PRUNE_MAX_CELLS", 8)
+    monkeypatch.setattr(W, "_LITERAL_PRUNE_MAX_CELLS", 8)
 
     def _boom(*a, **k):
         raise AssertionError("pivot materialized before the cap check")
 
     monkeypatch.setattr(pd.DataFrame, "pivot", _boom)
     idf_all = {1: 1.0, 2: 1.0, 3: 1.0}
-    assert pidx._fold_batch_thresholds(idf_all, []) is None
+    # a live cut, so the cap (not the no-seed rule) is what declines
+    q = {"idf": idf_all, "required": set(), "neg_ids": set(),
+         "cut": 1.0, "kind": "plain"}
+    assert pidx._fold_batch_thresholds(idf_all, [q]) is None
 
 
 # --- positional batch shapes (phrase / proximity) ----------------------
