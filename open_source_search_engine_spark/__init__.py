@@ -12,13 +12,17 @@ Layout
 - ``session``        SparkSession factory tuned for the sandbox/local mode
 - ``extraction``     pinned HTML → text spec + Arrow UDF (ref: Xml.cpp/XmlDoc.cpp)
 - ``tokenizer``      tokenization + termids (ref: Words.cpp, hash.h)
-- ``functions/``     scalar/vector function library (varbyte codec, hashing,
-                     text-quality, simhash/minhash primitives)
-- ``operators/``     index build, BM25, block-max WAND, dedup, similarity,
-                     facets, top-k
-- ``plans/``         query parser + planner (ref: Query.cpp)
-- ``sources/``       catalog of driver testdata + synthetic webtext tables
-- ``streaming/``     incremental index ingest (ref: Msg4.cpp/Rdb.cpp LSM path)
+- ``functions/``     ``varbyte``: delta-gap + varbyte postings codec
+- ``operators/``     index build, packed segments, BM25, block-max WAND,
+                     query parser + search (ref: Query.cpp), dedup,
+                     similarity, crawl-side replays, and the
+                     ``queries_*`` registry of driver (Spark, DuckDB) pairs
+- ``sources/``       catalog of driver testdata + synthetic webtext tables;
+                     ``codecs``: standalone media codecs, used by no
+                     search path
+- ``streaming/``     incremental index ingest (ref: Msg4.cpp/Rdb.cpp LSM
+                     path), ingest-time dedup gates, per-key throttle
+- ``data/``          bundled synonym and title lists
 """
 
 __version__ = "0.1.0"

@@ -39,8 +39,8 @@ Correctness: pinned against an independent pure-Python reference
 implementation of the published algorithm in tests/test_bpe.py
 (identical merge sequence, identical per-word segmentations,
 identical per-doc subword counts). Not SQL-expressible in one
-statement (iterative argmax), so this family is pytest-tier like the
-codecs — no driver registry entry, disclosed in COVERAGE.md.
+statement (iterative argmax), so this family is pytest-tier — no
+driver registry entry, disclosed in COVERAGE.md.
 
 Determinism: ties on pair count break by lexicographic (a, b) —
 pinned here AND in the reference implementation (the paper leaves

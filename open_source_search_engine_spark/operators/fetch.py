@@ -28,8 +28,8 @@ early when no chain is still moving. Real-web redirect chains are
 short (P(redirect) here is 0.2, expected chain ≈ 1.25 hops), so the
 loop runs 2-3 waves; settled rows leave the loop immediately instead
 of riding every wave. No Python in the resolution path; gzip decode is
-one ``mapInPandas`` pass (zlib is stdlib), binary-through-Arrow like
-the multimodal codecs.
+one ``mapInPandas`` pass (zlib is stdlib) with the body bytes
+carried through Arrow as a binary column.
 """
 
 from __future__ import annotations

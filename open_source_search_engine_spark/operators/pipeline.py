@@ -2477,41 +2477,43 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     tokens (the standard pre-training scrub, e.g. the BigScience ROOTS
     pipeline's regex pass — public recipe).
 
-    All four passes are JVM ``regexp_replace``/``regexp_count`` on the
-    raw text — one narrow projection, zero shuffle, zero Python; at
-    100 TB this runs at scan speed next to the other per-doc signals.
-    Counts are computed BEFORE masking (order-independent); masking
-    applies in the pinned order above.
+    All four passes are JVM ``regexp_count``/``regexp_replace`` — one
+    narrow projection, zero shuffle, zero Python; at 100 TB this runs
+    at scan speed next to the other per-doc signals. Each class is
+    counted on the text already masked by the classes before it in the
+    pinned order above, so the counts agree with the masked text: the
+    digits of ``123-456-7890@x.com`` are part of one email, not also a
+    phone.
     """
-    out = docs.select(
-        "docid",
-        *[
-            F.regexp_count(F.col(text_col), F.lit(pat))
-            .cast("long").alias(f"n_{name}")
-            for name, pat, _ in PII_PATTERNS
-        ],
-        F.col(text_col).alias("text_redacted"),
-    )
-    for _, pat, repl in PII_PATTERNS:
+    out = docs.select("docid", F.col(text_col).alias("text_redacted"))
+    for name, pat, repl in PII_PATTERNS:
         out = out.withColumn(
+            f"n_{name}",
+            F.regexp_count("text_redacted", F.lit(pat)).cast("long"),
+        ).withColumn(
             "text_redacted",
             F.regexp_replace("text_redacted", pat, repl),
         )
-    return out
+    return out.select(
+        "docid", *[f"n_{name}" for name, _, _ in PII_PATTERNS],
+        "text_redacted",
+    )
 
 
 def pii_redact_sql(source_sql: str = "documents",
                    id_col: str = "doc_id") -> str:
     """DuckDB replay of ``pii_redact`` (same pattern strings — RE2 and
-    Java regex agree on this subset; \\b and {m,n} included)."""
-    counts = ",\n       ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT)"
-        f" AS n_{name}"
-        for name, pat, _ in PII_PATTERNS
-    )
+    Java regex agree on this subset; \\b and {m,n} included), each
+    class counted on the text masked by the classes before it."""
+    cols = []
     red = "text"
-    for _, pat, repl in PII_PATTERNS:
+    for name, pat, repl in PII_PATTERNS:
+        cols.append(
+            f"CAST(len(regexp_extract_all({red}, '{pat}')) AS BIGINT)"
+            f" AS n_{name}"
+        )
         red = f"regexp_replace({red}, '{pat}', '{repl}', 'g')"
+    counts = ",\n       ".join(cols)
     return f"""
 SELECT {id_col} AS docid,
        {counts},

@@ -5,7 +5,7 @@ Conventions (driver contract):
 - every callable takes (spark, sf_dir) and returns a DataFrame;
 - column names identical on both sides; numeric outputs cast to long
   or rounded double(4) on both sides;
-- where an op is not SQL-expressible (packed codecs, WAND internals,
+- where an op is not SQL-expressible (varbyte-packed postings, WAND internals,
   streaming state) there is no oracle entry — the driver records a
   rows-only check and the pytest suite carries the equivalence proof.
 """

@@ -419,9 +419,10 @@ class SegmentStore:
         ``globals_``/``term_stats`` that exclude them (idf/avgdl
         skew, oracle divergence) until a rebuild. Committed dirs come
         from the manifest (batch rows name dir ``part_lo``, stream
-        rows name ``segment_id``); dirs the manifest names but that
-        don't exist (e.g. a compacted store carrying the source
-        manifest) are skipped. Manifest-less stores read wholesale."""
+        rows name ``segment_id``). A committed dir that is missing
+        raises: ``globals_``/``term_stats`` still count its docs, so
+        reading the rest would return a silently different top-k.
+        Manifest-less stores read wholesale."""
         root = os.path.join(self.root, "postings_packed")
         if not os.path.exists(self.manifest_path):
             return spark.read.parquet(root)
@@ -431,11 +432,13 @@ class SegmentStore:
             .select("segment_id", "part_lo")
             .collect()
         )
-        dirs = set()
-        for r in rows:
-            d = self.segment_dir(_row_dir_name(r))
-            if os.path.exists(d):
-                dirs.add(d)
+        dirs = {self.segment_dir(_row_dir_name(r)) for r in rows}
+        missing = sorted(d for d in dirs if not os.path.exists(d))
+        if missing:
+            raise FileNotFoundError(
+                f"committed segment dir(s) missing from {self.root}: "
+                f"{missing}"
+            )
         if not dirs:
             return spark.read.parquet(root)
         return spark.read.option("basePath", root).parquet(*sorted(dirs))
@@ -860,15 +863,38 @@ def compact_segments(
 ) -> SegmentStore:
     """A9 whole-store compaction into a NEW root: every committed
     segment k-way merged to one block per (termid, bucket) via
-    ``_merge_packed_blocks``. For in-place bounded maintenance of a
-    live (e.g. streaming-ingest) store, use ``maybe_compact``."""
+    ``_merge_packed_blocks``. The new root's manifest holds one
+    committed row for the ``segment=0`` it writes, summing the
+    source's current committed rows. For in-place bounded maintenance
+    of a live (e.g. streaming-ingest) store, use ``maybe_compact``."""
+    from pyspark.sql import Observation
+
+    t0 = time.time()
     packed = store.packed(spark)
     has_pos = _check_pos_layout(packed)
-    merged = _merge_packed_blocks(packed, has_pos)
+    obs = Observation()
+    merged = _merge_packed_blocks(packed, has_pos).observe(
+        obs, F.sum("n").alias("rows")
+    )
     out = SegmentStore(out_root)
     merged.write.mode("overwrite").parquet(out.segment_dir(0))
     if os.path.exists(store.manifest_path):
-        store.manifest(spark).write.mode("overwrite").parquet(out.manifest_path)
+        src = (
+            store.manifest_current(spark)
+            .filter(F.col("status") == "committed")
+            .collect()
+        )
+        _append_manifest_row(
+            out.manifest_path,
+            segment_id="seg-00000",
+            part_lo=0,
+            part_hi=0,
+            status="committed",
+            rows=int(obs.get["rows"] or 0),
+            docs=int(sum(r["docs"] or 0 for r in src)),
+            sum_doclen=int(sum(r["sum_doclen"] or 0 for r in src)),
+            wall_ms=int((time.time() - t0) * 1000),
+        )
     store.term_stats(spark).write.mode("overwrite").parquet(out.term_stats_path)
     return out
 

@@ -1,25 +1,15 @@
-"""REAL media codecs from the Python stdlib — no Pillow/ffmpeg needed.
+"""Media codecs from the Python stdlib — no Pillow/ffmpeg needed.
 
-Round 1-2 shipped the multimodal plumbing with a disclosed fake codec
-because the sandbox has no imaging libraries. That framing under-used
-the stdlib: WAV is fully decodable with ``wave`` + numpy, PNG is
-zlib-deflate + five per-row filters (implemented here from the PNG
-spec, RFC 2083 §6), and uncompressed BMP is a header parse. This
-module implements those three for real. Round 4 adds a pure-numpy
-JPEG codec — BASELINE (ITU-T T.81 sequential DCT: canonical Huffman,
+WAV is fully decodable with ``wave`` + numpy, PNG is zlib-deflate +
+five per-row filters (implemented here from the PNG spec, RFC 2083
+§6), and uncompressed BMP is a header parse. A pure-numpy JPEG codec
+covers BASELINE (ITU-T T.81 sequential DCT: canonical Huffman,
 Annex-K tables, batched 8×8 IDCT as two matrix products) and
 PROGRESSIVE (SOF2, spectral selection + successive approximation,
-Annex G) — plus GIF87a/89a (LZW) — so the dominant web image formats
-no longer ride the fake path. Round 5 adds WebP LOSSLESS (VP8L,
-RFC 9649) in sources/vp8l.py: rounds 1-4 rejected it as unverifiable
-("the 2D-distance table can't be validated against real encoders in
-this sandbox"), but the sandbox does hold a real libwebp bitstream —
-CPython's test fixture python.webp carries a VP8L-compressed ALPH
-chunk, and the sibling python.png stores the identical (lossless)
-alpha plane — so the decoder is now validated byte-exact against real
-encoder output. Remaining on the fake-codec fallback: MP4/H.264 and
-lossy-VP8 pixel decode (boolean arithmetic decoder + intra predictors
-+ loop filter ≈ a video codec; genuinely needs ffmpeg/libwebp).
+Annex G), alongside GIF87a/89a (LZW), netpbm/XBM, Sun Raster, SGI,
+TIFF, OpenEXR, AIFF/AU and an ISO-BMFF MP4 demuxer. WebP, MP4 and
+WebM are parsed for header metadata only; their pixel decode
+(VP8/VP8L, H.264) is not implemented.
 
 Everything is numpy-vectorized where the format allows: PNG's Up
 filter and all encoders are whole-row operations; Sub/Average/Paeth
@@ -27,9 +17,8 @@ unfiltering is inherently sequential per pixel along a row (each
 pixel needs the reconstructed left neighbor) but vectorizes across
 channels; rows stream in one pass.
 
-All functions are pure bytes→array/array→bytes kernels, designed to
-run inside Arrow-batched ``mapInPandas`` (sources/multimodal.py) —
-they never touch Spark.
+All functions are pure bytes→array/array→bytes kernels; they never
+touch Spark. No search path uses this module.
 """
 
 from __future__ import annotations
@@ -1058,9 +1047,7 @@ def decode_tiff(payload: bytes) -> np.ndarray:
     deliberately NOT implemented: its 'early change' code-width rule
     has a classic off-by-one that only a real LZW TIFF could pin, and
     the sandbox has neither a fixture nor a writer — a dual-validated
-    guess would round-trip yet still misread real files (the same
-    verifiability bar that kept VP8L out until a real bitstream
-    surfaced). JPEG-in-TIFF/tiled likewise raise ValueError; slot
+    guess would round-trip yet still misread real files. JPEG-in-TIFF/tiled likewise raise ValueError; slot
     libtiff in for them."""
     if payload[:4] == b"II*\x00":
         le = True
@@ -2137,12 +2124,10 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
 # spectral selection + successive approximation, Annex G), 8-bit, 1 or
 # 3 components, sampling factors ≤ 2 (4:4:4 / 4:2:2 / 4:2:0), restart
 # markers honored. Arithmetic coding / 12-bit / lossless raise
-# ValueError and land on the tagged 'fallback' route in
-# sources/multimodal.py. Entropy (de)coding is per-symbol Python —
+# ValueError. Entropy (de)coding is per-symbol Python —
 # inherently sequential bit I/O; everything after it (dequant, IDCT,
 # upsample, colorspace) is batched numpy over ALL blocks at once.
-# Production swaps this kernel for libjpeg-turbo; the Spark-side
-# plumbing is identical.
+# Production swaps this kernel for libjpeg-turbo.
 
 # Decode-side allocation cap: coefficient planes are sized from the
 # SOF header before any entropy data is read, so header dims bound
@@ -3447,8 +3432,7 @@ def demux_mp4(payload: bytes, keyframes_only: bool = False) -> list:
         # exact bound BEFORE materializing: n fixed-size samples must
         # fit in the file, so a corrupt header (n=0xFFFFFFFF) raises
         # instead of allocating a multi-GB list and OOM-killing the
-        # Arrow worker — multimodal.py catches only ValueError here
-        # (round-4 review fix)
+        # caller, which expects only ValueError (round-4 review fix)
         if n * fixed > len(buf):
             raise ValueError(
                 "corrupt MP4: stsz declares more sample bytes than "
@@ -4063,24 +4047,9 @@ def video_header_meta(payload: bytes) -> dict:
     raise ValueError(f"not a parseable video payload (sniffed {fmt!r})")
 
 
-@_corrupt_as_valueerror
-def decode_webp(payload: bytes) -> np.ndarray:
-    """WebP decode → (h, w, 4) uint8 RGBA. REAL for lossless (VP8L)
-    files — full RFC 9649 bitstream decode in sources/vp8l.py,
-    validated byte-exact against a real libwebp stream (the CPython
-    test fixture's VP8L-compressed alpha plane vs its PNG sibling;
-    see tests/test_vp8l.py). Lossy VP8 raises NotImplementedError
-    (boolean arithmetic decoder + intra predictors + loop filter
-    genuinely need libwebp) so multimodal routing keeps it on the
-    disclosed fake path rather than fabricating pixels."""
-    from . import vp8l
-
-    return vp8l.decode_webp(payload)
-
-
 def decode_image(payload: bytes) -> np.ndarray:
-    """Sniff-dispatched image decode (png/bmp/gif/ico/jpeg/webp-
-    lossless) → uint8 array."""
+    """Sniff-dispatched image decode (png/bmp/gif/ico/jpeg/pnm/xbm/
+    ras/sgi/tiff/exr) → uint8 array."""
     fmt = sniff(payload)
     if fmt == "png":
         return decode_png(payload)
@@ -4092,8 +4061,6 @@ def decode_image(payload: bytes) -> np.ndarray:
         return decode_ico(payload)
     if fmt == "jpeg":
         return decode_jpeg(payload)
-    if fmt == "webp":
-        return decode_webp(payload)
     if fmt == "pnm":
         return decode_pnm(payload)
     if fmt == "xbm":

@@ -1,6 +1,6 @@
 """BPE learning + segmentation vs an independent pure-Python
-reference of the published algorithm (Sennrich et al. 2016) — the
-same differential pattern the codecs use: the Spark implementation
+reference of the published algorithm (Sennrich et al. 2016) — a
+differential test: the Spark implementation
 (JVM folds over the vocabulary table) must reproduce the reference's
 merge sequence, segmentations and per-doc subword counts exactly,
 including the pinned lexicographic tie-break.

@@ -122,41 +122,6 @@ def test_sniff():
     assert C.sniff(b"\x00\x01\x02") == "unknown"
 
 
-def test_decode_kernel_routes_real_formats():
-    from open_source_search_engine_spark.sources import multimodal as M
-
-    a = np.full((3, 4, 3), 255, np.uint8)
-    img = M._decode_kernel(C.encode_png(a), "image")
-    assert img.size == 36 and (img == 1.0).all()
-    x = np.full(100, 0.5, np.float32)
-    aud = M._decode_kernel(C.encode_wav(x, 8000), "audio")
-    assert aud.size == 100 and np.abs(aud - 0.5).max() < 1e-3
-    gif = C.encode_gif(
-        np.zeros((2, 3), np.uint8), np.array([[255, 255, 255]], np.uint8)
-    )
-    _, tag = M._decode_with_codec(gif, "image")
-    assert tag == "gif"
-    # unknown format still lands on the deterministic fake
-    fake = M._decode_kernel(b"\x01\x02\x03", "video")
-    assert fake.size == 3
-
-
-def test_decode_kernel_codec_tags_observable():
-    """Corrupt real-format payloads are TAGGED, not silently faked
-    (round-4 ADVICE fix): 'fallback' ≠ 'fake' ≠ real codec names."""
-    from open_source_search_engine_spark.sources import multimodal as M
-
-    a = np.full((3, 4, 3), 7, np.uint8)
-    good = C.encode_png(a)
-    _, tag = M._decode_with_codec(good, "image")
-    assert tag == "png"
-    # truncate mid-IDAT: sniffs as png, fails to decode → 'fallback'
-    _, tag = M._decode_with_codec(good[: len(good) - 20], "image")
-    assert tag == "fallback"
-    _, tag = M._decode_with_codec(b"\x01\x02\x03", "video")
-    assert tag == "fake"
-
-
 # --- baseline JPEG (round 4: pure-numpy T.81 sequential DCT) ---------------
 
 
@@ -803,29 +768,6 @@ def test_gif_frames_transparency_and_background_disposal():
     assert (c1[1, 2] == pal[0]).all()          # transparent → bg shows
     # frames only re-composite identically
     assert (frames[2][1] == c1).all()
-
-
-def test_gif_sampler_grid_over_animation():
-    """sample_frames-style grid pick over decode_gif_frames output:
-    the multimodal route encodes picked frames as PNG — round-trip
-    one and check pixels."""
-    import numpy as _np
-
-    from open_source_search_engine_spark.sources import (
-        multimodal as M,
-    )
-
-    pal = _np.array([[0, 0, 0], [9, 9, 9]], dtype=_np.uint8)
-    frames = [
-        _np.full((3, 3), i % 2, dtype=_np.uint8) for i in range(6)
-    ]
-    enc = C.encode_gif(frames, pal, delays_ms=500)
-    fr = C.decode_gif_frames(enc)
-    picked = M._grid_samples(fr, 1000, 3)
-    assert [ts for ts, _ in picked] == [0, 1000, 2000]
-    # picked[1] is animation frame 2 (ts=1000), whose indices are 0
-    png = C.encode_png(picked[1][1])
-    assert (C.decode_png(png)[:, :, :3] == pal[0]).all()
 
 
 def test_jpeg_422_subsampling_baseline_and_progressive():
@@ -1541,13 +1483,6 @@ def test_sniff_and_dispatch_pnm_xbm():
     assert C.sniff(_imghdr("xbm")) == "xbm"
     assert C.decode_image(_imghdr("ppm")).shape == (16, 16, 3)
     assert C.decode_image(_imghdr("xbm")).shape == (16, 16)
-    from open_source_search_engine_spark.sources.multimodal import (
-        _decode_with_codec,
-    )
-    _, tag = _decode_with_codec(_imghdr("ppm"), "image")
-    assert tag == "pnm"
-    _, tag = _decode_with_codec(_imghdr("xbm"), "image")
-    assert tag == "xbm"
 
 
 def test_ras_sgi_tiff_fixtures_match_png_exactly():
@@ -1722,13 +1657,6 @@ def test_audio_cross_container_same_clip():
     for name, fmt in (("pcm24.aiff", "aiff"), ("pcm24.au", "au"),
                       ("ulaw.aifc", "aiff"), ("ulaw.au", "au")):
         assert C.sniff(_audio(name)) == fmt
-    from open_source_search_engine_spark.sources.multimodal import (
-        _decode_with_codec,
-    )
-    s, tag = _decode_with_codec(_audio("pcm24.aiff"), "audio")
-    assert tag == "aiff" and s.size == 3307
-    s, tag = _decode_with_codec(_audio("ulaw.au"), "audio")
-    assert tag == "au" and s.size == 3307
 
 
 def test_aiff_au_corrupt_raise_valueerror():

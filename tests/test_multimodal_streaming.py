@@ -1,326 +1,11 @@
-"""Multimodal mapInPandas plumbing (fake codec) + streaming surface:
-incremental index foreachBatch, watermarked windows, session windows."""
+"""Streaming surface: incremental index foreachBatch, watermarked
+windows, session windows, per-key throttle, ingest-time dedup."""
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
-import pytest
 from conftest import SF_CORRECT, assert_df_matches_duckdb
-
-from open_source_search_engine_spark.sources import multimodal as M
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    df = M.synth_media(spark, n=48).cache()
-    df.count()
-    yield df
-    df.unpersist()
-
-
-def test_decode_media_schema_and_determinism(spark, media):
-    out = M.decode_media(media)
-    assert [f.name for f in out.schema.fields] == [
-        "media_id", "kind", "codec", "n_samples", "sample_mean",
-        "sample_std",
-    ]
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 48
-    # the route tag is observable: synth images/audio hit the REAL
-    # stdlib codecs, only MP4 video rides the disclosed fake path
-    by_kind = {(r["kind"], r["codec"]) for r in rows.values()}
-    assert ("video", "fake") in by_kind
-    assert all(
-        c in ("png", "bmp", "jpeg", "webp")
-        for k, c in by_kind if k == "image"
-    )
-    assert ("image", "jpeg") in by_kind  # real baseline-JPEG decode
-    assert ("image", "webp") in by_kind  # real VP8L lossless decode
-    assert all(
-        c in ("wav", "aiff", "au") for k, c in by_kind if k == "audio"
-    )
-    assert ("audio", "aiff") in by_kind  # real AIFF decode
-    assert ("audio", "au") in by_kind    # real Sun AU decode
-    # deterministic fake codec: recompute one row in-process
-    r0 = media.filter(media.media_id == 0).first()
-    d = M._decode_kernel(bytes(r0["payload"]), r0["kind"])
-    assert rows[0]["n_samples"] == d.size
-    assert abs(rows[0]["sample_mean"] - float(d.mean())) < 1e-9
-
-
-def test_extract_features_dim_and_join_ann(spark, media):
-    feats = M.extract_features(media, dim=16).collect()
-    assert all(len(r["feature"]) == 16 for r in feats)
-    m = np.array([r["feature"] for r in feats])
-    assert np.isfinite(m).all()
-
-
-def test_resize_images_only_images_fixed_size(spark, media):
-    from open_source_search_engine_spark.sources import codecs as C
-
-    out = M.resize_images(media, w=8, h=8).collect()
-    kinds = {r["media_id"] for r in media.filter("kind = 'image'").collect()}
-    assert {r["media_id"] for r in out} == kinds
-    assert all(r["width"] == 8 and r["height"] == 8 for r in out)
-    # synth images are real PNG/BMP/JPEG/WebP → resize re-encodes REAL
-    # 8x8 PNGs (the WebP rows decode to RGBA and keep their alpha)
-    shapes = set()
-    for r in out:
-        arr = C.decode_png(bytes(r["payload"]))
-        assert arr.shape[:2] == (8, 8) and arr.shape[2] in (3, 4)
-        shapes.add(arr.shape[2])
-    assert shapes == {3, 4}
-
-
-def test_resize_is_true_nearest_neighbor(spark, media):
-    """The resized pixels are exactly the source pixels the nearest-
-    neighbor index map selects — decode-resize-encode round-trips
-    through the REAL codecs."""
-    import numpy as np
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    r0 = media.filter("kind = 'image'").first()
-    src = bytes(r0["payload"])
-    arr = C.decode_image(src)
-    out = M.resize_images(
-        media.filter(media.media_id == r0["media_id"]), w=16, h=12
-    ).first()
-    got = C.decode_png(bytes(out["payload"]))
-    want = C.resize_nearest(arr, 16, 12)
-    assert (got == want).all() and got.shape == (12, 16, 3)
-
-
-def test_sample_frames_flatmap(spark, media):
-    """Synth video rows are REAL MP4 containers (round 4), so the
-    sampled frames must be the ACTUAL demuxed samples: real stts
-    timestamps and byte-exact sample payloads sliced from mdat."""
-    from open_source_search_engine_spark.sources import codecs as C
-
-    vid_rows = media.filter("kind = 'video'").collect()
-    out = M.sample_frames(media, every_ms=1000, max_frames=4).collect()
-    vids = {r["media_id"] for r in vid_rows}
-    assert {r["media_id"] for r in out} == vids
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r)
-    # video rows are MP4 (byte-exact demux) or animated lossless WebP
-    # (real VP8L frame compositing, PNG-encoded)
-    mp4_rows = {r["media_id"]: r for r in vid_rows
-                if C.sniff(bytes(r["payload"])) == "mp4"}
-    webp_rows = {r["media_id"] for r in vid_rows
-                 if C.sniff(bytes(r["payload"])) == "webp"}
-    assert mp4_rows and webp_rows  # the rotation covers both
-    demuxed = {
-        mid: dict(C.demux_mp4(bytes(r["payload"])))
-        for mid, r in mp4_rows.items()
-    }
-    for mid, frames in by_id.items():
-        frames.sort(key=lambda f: f["frame_idx"])
-        assert [f["frame_idx"] for f in frames] == list(range(len(frames)))
-        assert len(frames) <= 4
-        tss = [f["ts_ms"] for f in frames]
-        assert tss == sorted(set(tss))  # strictly increasing real ts
-        for f in frames:
-            if mid in mp4_rows:
-                # byte-exact: the frame is the demuxed sample at its ts
-                assert bytes(f["frame"]) == demuxed[mid][f["ts_ms"]]
-            else:
-                assert mid in webp_rows
-                img = C.decode_png(bytes(f["frame"]))
-                assert img.shape == (16, 16, 4)
-
-
-def test_sample_frames_zero_sample_mp4_takes_standin(spark):
-    """A structurally valid MP4 whose tables declare 0 samples must
-    not crash the mapInPandas batch (round-4 review fix): demux
-    returns [] and the row takes the byte-stride stand-in path."""
-    import struct as _struct
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    enc = C.encode_mp4([b"aaaa"], 400)
-    si = enc.find(b"stsz")
-    cnt = si + 4 + 4 + 4
-    patched = enc[:cnt] + _struct.pack(">I", 0) + enc[cnt + 4 :]
-    df = spark.createDataFrame(
-        [(7, "video", patched, "video/mp4", 64, 48, 3000)],
-        M.MEDIA_SCHEMA,
-    )
-    out = M.sample_frames(df, every_ms=1000, max_frames=4).collect()
-    assert len(out) == 3  # duration_ms // every_ms stand-in frames
-    assert all(r["media_id"] == 7 for r in out)
-
-
-def test_sample_frames_animated_gif_real_route(spark):
-    """Animated GIF payloads take the REAL route in sample_frames:
-    frames decoded + composited (decode_gif_frames), grid-sampled on
-    their cumulative GCE timestamps, shipped as PNG bytes."""
-    import numpy as _np
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    pal = _np.array([[0, 0, 0], [9, 9, 9]], dtype=_np.uint8)
-    frames = [
-        _np.full((4, 4), i % 2, dtype=_np.uint8) for i in range(6)
-    ]
-    gif = C.encode_gif(frames, pal, delays_ms=500)
-    df = spark.createDataFrame(
-        [(11, "video", gif, "image/gif", 4, 4, 3000)],
-        M.MEDIA_SCHEMA,
-    )
-    out = sorted(
-        M.sample_frames(df, every_ms=1000, max_frames=3).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [r["ts_ms"] for r in out] == [0, 1000, 2000]
-    for r in out:
-        img = C.decode_png(bytes(r["frame"]))
-        want = pal[(r["ts_ms"] // 500) % 2]
-        assert (img[:, :, :3] == want).all()
-
-
-def test_audio_stats_spectral_features(spark):
-    """audio_stats surfaces the quality-filter spectral columns: a
-    440 Hz WAV reads as tonal (centroid near the tone, flatness ~0) on
-    the real 'wav' route; a non-WAV payload takes the tagged fake
-    route and still yields well-formed rows."""
-    import numpy as _np
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    t = _np.arange(8000, dtype=_np.float32) / 8000.0
-    tone = (0.5 * _np.sin(2 * _np.pi * 440.0 * t)).astype(_np.float32)
-    wav = C.encode_wav(tone, 8000)
-    df = spark.createDataFrame(
-        [
-            (1, "audio", wav, "audio/wav", 0, 0, 1000),
-            (2, "audio", b"\x01\x02\x03" * 50, "audio/x-raw", 0, 0, 1000),
-            (3, "image", wav, "audio/wav", 0, 0, 1000),  # filtered out
-        ],
-        M.MEDIA_SCHEMA,
-    )
-    out = {r["media_id"]: r for r in M.audio_stats(df).collect()}
-    assert set(out) == {1, 2}
-    r1 = out[1]
-    assert r1["codec"] == "wav"
-    assert abs(r1["spectral_centroid_hz"] - 440.0) < 40.0
-    assert r1["spectral_flatness"] < 0.05
-    assert r1["duration_ms"] == 1000
-    assert out[2]["codec"] == "fake"
-    assert out[2]["rms"] > 0.0
-
-
-def test_media_meta_predecode_filter(spark):
-    """media_meta extracts header metadata per image row with no pixel
-    decode; unparseable payloads yield format='unknown' rows instead
-    of failing the batch."""
-    import numpy as _np
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    img = _np.zeros((10, 20, 3), dtype=_np.uint8)
-    rows = [
-        (1, "image", C.encode_png(img), "image/png", 20, 10, 0),
-        (2, "image", C.encode_jpeg_progressive(img), "image/jpeg", 20, 10, 0),
-        (3, "image", b"garbage", "image/x", 0, 0, 0),
-        (4, "audio", C.encode_png(img), "image/png", 0, 0, 0),  # filtered
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in M.media_meta(df).collect()}
-    assert set(out) == {1, 2, 3}
-    assert (out[1]["format"], out[1]["width"], out[1]["height"]) == (
-        "png", 20, 10,
-    )
-    assert out[2]["flags"] == "progressive"
-    assert out[3]["format"] == "unknown" and out[3]["width"] == 0
-
-
-def test_sample_frames_image_kind_gif_and_still_skip(spark):
-    """Kind gating matches payload sniffing (review fix): an animated
-    GIF labeled kind='image' (the natural MIME mapping) still yields
-    real sampled frames; still images yield NO stand-in rows; non-WAV
-    audio keeps the input row's duration in audio_stats."""
-    import numpy as _np
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    pal = _np.array([[0, 0, 0], [9, 9, 9]], dtype=_np.uint8)
-    anim = C.encode_gif(
-        [_np.full((3, 3), i % 2, dtype=_np.uint8) for i in range(4)],
-        pal, delays_ms=1000,
-    )
-    still_png = C.encode_png(_np.zeros((4, 4, 3), dtype=_np.uint8))
-    df = spark.createDataFrame(
-        [
-            (1, "image", anim, "image/gif", 3, 3, 0),
-            (2, "image", still_png, "image/png", 4, 4, 0),
-            (3, "audio", b"\x09" * 300, "audio/mpeg", 0, 0, 183000),
-        ],
-        M.MEDIA_SCHEMA,
-    )
-    out = M.sample_frames(df, every_ms=1000, max_frames=8).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r)
-    assert set(by_id) == {1}          # the still emitted nothing
-    assert len(by_id[1]) == 4         # every animation frame sampled
-    stats = M.audio_stats(df).collect()
-    assert stats[0]["codec"] == "fake"
-    assert stats[0]["duration_ms"] == 183000  # input column, not 512
-
-
-def test_sample_frames_apng_real_route(spark):
-    """APNG payloads (kind='image', the natural mapping) take the real
-    frame-sampling route: composited RGBA frames grid-sampled at fcTL
-    timestamps, shipped as PNG bytes."""
-    import numpy as _np
-
-    from open_source_search_engine_spark.sources import codecs as C
-
-    frames = []
-    for i in range(4):
-        f = _np.zeros((3, 3, 4), dtype=_np.uint8)
-        f[:] = (i * 60, 0, 0, 255)
-        frames.append(f)
-    apng = C.encode_apng(frames, delays_ms=1000)
-    df = spark.createDataFrame(
-        [(21, "image", apng, "image/apng", 3, 3, 0)], M.MEDIA_SCHEMA
-    )
-    out = sorted(
-        M.sample_frames(df, every_ms=2000, max_frames=4).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [r["ts_ms"] for r in out] == [0, 2000]
-    img = C.decode_png(bytes(out[1]["frame"]))
-    assert (img[:, :, 0] == 120).all()  # animation frame 2
-
-
-def test_media_meta_video_route(spark):
-    """Video rows get real container metadata: MP4 dims/duration/codec
-    from mvhd/tkhd/stsd; unparseable video payloads yield 'unknown'
-    rows (never batch failures)."""
-    from open_source_search_engine_spark.sources import codecs as C
-
-    mp4 = C.encode_mp4([b"y" * 16] * 4, durations_ms=500,
-                       width=128, height=96)
-    df = spark.createDataFrame(
-        [
-            (31, "video", mp4, "video/mp4", 128, 96, 2000),
-            (32, "video", b"\x00" * 40, "video/x", 0, 0, 0),
-        ],
-        M.MEDIA_SCHEMA,
-    )
-    out = {r["media_id"]: r for r in M.media_meta(df).collect()}
-    r = out[31]
-    assert (r["format"], r["width"], r["height"]) == ("mp4", 128, 96)
-    assert r["duration_ms"] == 2000 and r["flags"] == "mp4v"
-    assert out[32]["format"] == "unknown"
-
-
-# --- streaming -------------------------------------------------------------
 
 
 def test_events_windowed_oracle(spark, duck_correct):

@@ -653,6 +653,7 @@ def test_pii_redact_known_answer_and_oracle(spark):
         (3, "server at 10.0.255.7 and 192.168.1.1: ports open"),
         (4, "clean text with no identifiers at all"),
         (5, "two mails a@b.io c@d.org one ip 8.8.8.8"),
+        (6, "123-456-7890@x.com"),
     ]
     docs = spark.createDataFrame(rows, "docid long, text string")
     out = {r["docid"]: r for r in P.pii_redact(docs).collect()}
@@ -667,6 +668,10 @@ def test_pii_redact_known_answer_and_oracle(spark):
     assert out[3]["text_redacted"] == "server at <IP> and <IP>: ports open"
     assert out[4]["text_redacted"] == rows[3][1]
     assert out[5]["n_email"] == 2 and out[5]["n_ipv4"] == 1
+    # counts agree with the masked text: the phone-shaped local part
+    # is masked as part of the email, so it is not also a phone
+    assert out[6]["n_email"] == 1 and out[6]["n_phone"] == 0
+    assert out[6]["text_redacted"] == "<EMAIL>"
     # DuckDB replay on the same fixture, same comparator as the driver
     con = duckdb.connect()
     con.register(

@@ -69,7 +69,7 @@ def test_every_coverage_row_keeps_a_driver_slot():
     missing = []
     for rid, ver in rows:
         if "queries" not in ver:
-            continue  # pytest-only verification (codecs, streaming state)
+            continue  # pytest-only verification (streaming state, BPE)
         cited = [
             n for n in re.findall(r"`([a-z0-9_]+)`", ver)
             if n in prim or n in ext

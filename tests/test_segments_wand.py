@@ -124,6 +124,23 @@ def test_packed_excludes_uncommitted_segment(spark, tmp_path_factory):
     assert n == 500 and avgdl > 0
 
 
+def test_packed_raises_on_missing_committed_segment(spark, tmp_path_factory):
+    """A committed segment whose dir is gone must fail loudly: globals
+    and term_stats still count its docs, so scoring the remaining
+    segments would return a different top-k with no error."""
+    import shutil
+
+    root = str(tmp_path_factory.mktemp("idx_missing_seg"))
+    st = build_segments(
+        spark, _docs(spark), SegmentStore(root), n_segments=3, n_buckets=8
+    )
+    shutil.rmtree(st.segment_dir(1))
+    with pytest.raises(FileNotFoundError, match="segment=1"):
+        st.packed(spark)
+    with pytest.raises(FileNotFoundError, match="segment=1"):
+        PackedIndex(spark, st).wand_topk(["join"], k=5).collect()
+
+
 WAND_CASES = [
     (["join"], "and", None),
     (["join", "filter"], "and", None),
