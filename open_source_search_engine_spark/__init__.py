@@ -17,8 +17,8 @@ Layout
                      query parser + search (ref: Query.cpp), dedup,
                      similarity, crawl-side replays, and the
                      ``queries_*`` registry of driver (Spark, DuckDB) pairs
-- ``sources/``       catalog of driver testdata + synthetic webtext tables;
-                     ``codecs``: standalone media codecs, used by no
+- ``sources/``       synthetic webtext corpus and its ``catalog`` reader;
+                     ``codecs``: standalone image codecs, used by no
                      search path
 - ``streaming/``     incremental index ingest (ref: Msg4.cpp/Rdb.cpp LSM
                      path), ingest-time dedup gates, per-key throttle

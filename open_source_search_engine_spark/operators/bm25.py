@@ -98,24 +98,6 @@ def bm25_topk(
     return out.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 
 
-def phrase_match_docids(index: InvertedIndex, w1: str, w2: str) -> DataFrame:
-    """Docids where token w2 appears at position pos(w1)+1 (D7 phrase
-    match via the positions join; ref: Matches.cpp adjacency check).
-    Requires the index to be built with_positions=True."""
-    p1 = index.postings.filter(F.col("term") == w1).select(
-        "docid", F.explode("positions").alias("p1")
-    )
-    p2 = index.postings.filter(F.col("term") == w2).select(
-        "docid", (F.explode("positions")).alias("p2")
-    )
-    return (
-        p1.join(p2, "docid")
-        .filter(F.col("p2") == F.col("p1") + 1)
-        .select("docid")
-        .distinct()
-    )
-
-
 def bm25_oracle_sql(
     terms: list[str],
     k: int = 10,

@@ -660,8 +660,10 @@ def finalize_term_stats(spark: SparkSession, store: SegmentStore) -> None:
     committed segments: a compacted segment's counts ride on the
     compacted successor's partial (written before the manifest
     transaction made it current), so a wholesale read would
-    double-count df/cf for every term the retired sources held.
-    Manifest-less stores keep the wholesale read."""
+    double-count df/cf for every term the retired sources held. A
+    committed segment whose partial is missing raises, as in
+    ``SegmentStore.packed``: summing the rest would silently change
+    df and the top-k. Manifest-less stores keep the wholesale read."""
     proot = os.path.join(store.root, "term_stats_partial")
     if os.path.exists(store.manifest_path):
         rows = (
@@ -671,13 +673,14 @@ def finalize_term_stats(spark: SparkSession, store: SegmentStore) -> None:
             .collect()
         )
         dirs = sorted(
-            d
-            for d in (
-                os.path.join(proot, f"segment={_row_dir_name(r)}")
-                for r in rows
-            )
-            if os.path.exists(d)
+            os.path.join(proot, f"segment={_row_dir_name(r)}") for r in rows
         )
+        missing = [d for d in dirs if not os.path.exists(d)]
+        if missing:
+            raise FileNotFoundError(
+                f"committed term_stats partial dir(s) missing from "
+                f"{store.root}: {missing}"
+            )
         partials = (
             spark.read.option("basePath", proot).parquet(*dirs)
             if dirs

@@ -1,71 +1,15 @@
-"""Table catalog: driver testdata + synthetic webtext + sink abstraction.
-
-Reference mapping (SURVEY.md §1.5): the Rdb file set becomes parquet
-directories locally; on a real cluster the same writers target an
-Iceberg catalog (``writeTo(...).append()``) — no Iceberg jars exist in
-this sandbox (verified), so the sink is chosen by config, not code.
+"""Table catalog: the synthetic webtext table, read from its parquet
+directory (the local stand-in for the reference's Rdb file set,
+SURVEY.md §1.5).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .webtext import webtext_path
 
-DRIVER_TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.01"
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_driver_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    for t in DRIVER_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(t)
-
 
 def load_webtext(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
     """The input_hint-shaped table (url, warc_ts, html, text, lang)."""
     return spark.read.parquet(webtext_path(n_docs, seed))
-
-
-class ParquetSink:
-    """Minimal table sink: parquet dirs + atomic-ish overwrite-by-name.
-
-    At cluster scale this is an Iceberg table with snapshot commits
-    (SURVEY.md §2 I6/I7); the segment-name idempotence used by the
-    manifest (operators/index_build.py) gives the same
-    exactly-once-ish re-run behaviour locally.
-    """
-
-    def __init__(self, root: str):
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def path(self, table: str) -> str:
-        return os.path.join(self.root, table)
-
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> str:
-        p = self.path(table)
-        df.write.mode(mode).parquet(p)
-        return p
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
-
-    def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.exists(p) and (
-            os.path.exists(os.path.join(p, "_SUCCESS")) or any(
-                f.endswith(".parquet") for f in os.listdir(p)
-            )
-        )

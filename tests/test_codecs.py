@@ -1,6 +1,7 @@
-"""Real stdlib media codecs (sources/codecs.py): PNG (all five row
-filters), 24-bit BMP, PCM WAV — round-trips and adversarial filter
-streams. No Spark needed; these are pure bytes↔array kernels."""
+"""Stdlib image codecs (sources/codecs.py): PNG (all five row
+filters), BMP, GIF, ICO, netpbm/XBM, RAS/SGI/TIFF and EXR — round-trips,
+real-encoder fixtures and adversarial streams. No Spark needed; these
+are pure bytes↔array kernels."""
 
 from __future__ import annotations
 
@@ -76,31 +77,6 @@ def test_bmp_round_trip_with_padding():
     assert (C.decode_bmp(C.encode_bmp(a)) == a).all()
 
 
-def test_wav_round_trip_and_features():
-    x = np.sin(np.linspace(0, 40 * np.pi, 8000)).astype(np.float32) * 0.8
-    y, rate = C.decode_wav(C.encode_wav(x, 16000))
-    assert rate == 16000 and y.size == x.size
-    assert np.abs(y - x).max() < 2.0 / 32767  # 16-bit quantization
-    f = C.audio_features(y, rate)
-    # RMS of a 0.8-amplitude sine ≈ 0.8/sqrt(2)
-    assert abs(f["rms"] - 0.8 / np.sqrt(2)) < 0.01
-    assert f["duration_ms"] == 500
-    # spectral features: a pure 40π-over-8000-samples sine at 16 kHz
-    # is a 40 Hz tone — centroid ≈ the tone, tiny bandwidth, flatness
-    # near 0 (tonal); white noise flips flatness toward 1
-    assert abs(f["spectral_centroid_hz"] - 40.0) < 8.0
-    assert abs(f["spectral_rolloff_hz"] - 40.0) < 8.0
-    assert f["spectral_bandwidth_hz"] < 60.0
-    assert f["spectral_flatness"] < 0.01
-    noise = (np.random.RandomState(3).rand(8000).astype(np.float32)
-             * 2 - 1)
-    fn = C.audio_features(noise, 16000)
-    assert fn["spectral_flatness"] > 0.5
-    assert fn["spectral_centroid_hz"] > 2000.0
-    z = C.audio_features(np.zeros(100, np.float32), 8000)
-    assert z["spectral_flatness"] == 0.0 and z["spectral_centroid_hz"] == 0.0
-
-
 def test_resize_nearest_exact_mapping():
     a = np.arange(4, dtype=np.uint8).reshape(2, 2)[:, :, None]
     r = C.resize_nearest(a, 4, 4)
@@ -116,354 +92,28 @@ def test_sniff():
     a = np.zeros((2, 2, 3), np.uint8)
     assert C.sniff(C.encode_png(a)) == "png"
     assert C.sniff(C.encode_bmp(a)) == "bmp"
-    assert C.sniff(C.encode_wav(np.zeros(10, np.float32), 8000)) == "wav"
     assert C.sniff(b"\xff\xd8\xff jpeg") == "jpeg"
     assert C.sniff(b"GIF89a" + b"\x00" * 8) == "gif"
     assert C.sniff(b"\x00\x01\x02") == "unknown"
 
 
-# --- baseline JPEG (round 4: pure-numpy T.81 sequential DCT) ---------------
-
-
-def _gradient_rgb(h=24, w=33):
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [yy * 255 // h, xx * 255 // w, (yy + xx) * 255 // (h + w)],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def test_jpeg_sniff_and_round_trip_444():
-    img = _gradient_rgb()
-    enc = C.encode_jpeg(img)
-    assert C.sniff(enc) == "jpeg"
-    dec = C.decode_jpeg(enc)
-    assert dec.shape == img.shape and dec.dtype == np.uint8
-    err = np.abs(dec.astype(int) - img.astype(int))
-    # q50 quantization loss on a smooth gradient stays small
-    assert err.mean() < 4 and err.max() < 16
-
-
-def test_jpeg_420_subsampling_and_restart_markers():
-    """4:2:0 chroma + DRI exercise the decoder's generic MCU walk
-    (4 Y blocks per MCU) and the RST byte-align / DC-reset path."""
-    img = _gradient_rgb(h=37, w=50)  # odd sizes force edge padding
-    enc = C.encode_jpeg(img, subsample="420", restart_interval=3)
-    assert b"\xff\xdd" in enc and b"\xff\xd0" in enc  # DRI + RST0
-    dec = C.decode_jpeg(enc)
-    assert dec.shape == img.shape
-    err = np.abs(dec.astype(int) - img.astype(int))
-    assert err.mean() < 6  # chroma halved: a bit lossier, still close
-
-
-def test_jpeg_grayscale():
-    yy, xx = np.mgrid[0:16, 0:24]
-    g = ((yy * 4 + xx * 2) % 200 + 20).astype(np.uint8)
-    dec = C.decode_jpeg(C.encode_jpeg(g))
-    assert dec.shape == g.shape and dec.ndim == 2
-    assert np.abs(dec.astype(int) - g.astype(int)).mean() < 6
-
-
-def test_jpeg_deterministic_and_decode_pinned():
-    """encode and decode are bit-deterministic: the fixture's encoded
-    stream and its decoded pixels hash identically across runs (the
-    'byte-checked deterministic fixture' the round-4 plan asks for)."""
-    import hashlib
-
-    img = _gradient_rgb()
-    e1, e2 = C.encode_jpeg(img), C.encode_jpeg(img)
-    assert e1 == e2
-    d1 = C.decode_jpeg(e1)
-    d2 = C.decode_jpeg(e2)
-    assert (d1 == d2).all()
-    # pin against accidental kernel drift (tables, IDCT, rounding).
-    # CAVEAT: the encode path rounds einsum/BLAS float output, so a
-    # numpy/BLAS upgrade could legitimately flip a .5-boundary
-    # coefficient and change these hashes — if ONLY these two asserts
-    # fail after an environment change, re-pin; the determinism
-    # asserts above are the correctness claim.
-    assert hashlib.md5(e1).hexdigest() == (
-        "711b9bde6ee61a5df62de7f7582777d0"
-    )
-    assert hashlib.md5(d1.tobytes()).hexdigest() == (
-        "902bdca5095ba539d5b07bc1bd53c7e3"
-    )
-
-
-def test_jpeg_relabeled_sof2_is_corrupt():
-    """A BASELINE stream whose SOF0 marker is flipped to SOF2 is
-    corrupt (its single Ss=0..Se=63 scan is illegal in progressive
-    mode) — it must raise, not decode as garbage. Real progressive
-    streams are covered by test_jpeg_progressive_*."""
-    enc = bytearray(C.encode_jpeg(_gradient_rgb()))
-    i = bytes(enc).find(b"\xff\xc0")
-    enc[i + 1] = 0xC2  # SOF0 → SOF2 (progressive)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(bytes(enc))
-
-
 def test_decode_image_dispatch():
-    img = _gradient_rgb(8, 8)
+    yy, xx = np.mgrid[0:8, 0:8]
+    img = np.stack([yy * 32, xx * 32, (yy + xx) * 16],
+                   axis=-1).astype(np.uint8)
     assert (C.decode_image(C.encode_png(img)) == img).all()
     assert (C.decode_image(C.encode_bmp(img)) == img).all()
-    assert C.decode_image(C.encode_jpeg(img)).shape == img.shape
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         C.decode_image(b"\x00\x01\x02")
-
-
-def test_jpeg_rejects_multiscan_and_truncated_dri():
-    """Silent-garbage guards: a second SOS (multi-scan baseline) and a
-    DRI stream truncated at a restart boundary both raise instead of
-    decoding zero blocks as flat gray (they must land on the tagged
-    'fallback' route, not fake a real decode)."""
-    import pytest as _pytest
-
-    img = _gradient_rgb(h=37, w=50)
-    enc = C.encode_jpeg(img, subsample="420", restart_interval=2)
-    # truncate at the last RST marker: whole MCU intervals go missing
-    last_rst = max(enc.rfind(bytes([0xFF, 0xD0 + i])) for i in range(8))
-    truncated = enc[:last_rst] + b"\xff\xd9"
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(truncated)
-
-    # duplicate the SOS header+scan => multi-scan stream
-    sos = enc.find(b"\xff\xda")
-    eoi = enc.rfind(b"\xff\xd9")
-    doubled = enc[:eoi] + enc[sos:eoi] + b"\xff\xd9"
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(doubled)
-
-
-def test_jpeg_corrupt_streams_raise_valueerror():
-    """The documented failure mode for corrupt-but-sniffed-as-JPEG
-    payloads is ValueError — never IndexError/StopIteration/KeyError
-    (round-4 review fix). Exercises: SOS naming a component id absent
-    from SOF, SOS arriving before any SOF, and a segment truncated
-    mid-header."""
-    import pytest as _pytest
-
-    enc = C.encode_jpeg(_gradient_rgb(16, 16))
-
-    # SOS names component id 9 which SOF never declared
-    sos = enc.find(b"\xff\xda")
-    bad_comp = bytearray(enc)
-    bad_comp[sos + 5] = 9  # first scan component selector
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(bytes(bad_comp))
-
-    # SOS before SOF: splice the SOS header+scan right after SOI
-    eoi = enc.rfind(b"\xff\xd9")
-    premature = enc[:2] + enc[sos:eoi] + b"\xff\xd9"
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(premature)
-
-    # segment truncated mid-header (struct.unpack would die)
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(enc[: enc.find(b"\xff\xc4") + 3])
-
-
-# --- MP4 (ISO BMFF demux) ---------------------------------------------------
-
-
-def test_mp4_roundtrip_frames_and_timestamps():
-    """encode_mp4 → demux_mp4 returns byte-exact samples with the
-    cumulative stts timestamps, across multi-chunk stsc layouts and
-    run-length stts (mixed per-frame durations)."""
-    frames = [bytes([i] * (10 + 7 * i)) for i in range(7)]
-    durs = [400, 400, 500, 500, 500, 300, 300]
-    enc = C.encode_mp4(frames, durs, samples_per_chunk=3)
-    assert C.sniff(enc) == "mp4"
-    out = C.demux_mp4(enc)
-    assert [b for _, b in out] == frames
-    assert [t for t, _ in out] == [0, 400, 800, 1300, 1800, 2300, 2600]
-    # uniform int duration + single frame (one chunk, one stts run)
-    assert C.demux_mp4(C.encode_mp4([b"xyz"], 250)) == [(0, b"xyz")]
-    # non-1000 timescale: ts still lands in ms
-    enc2 = C.encode_mp4([b"a", b"bb"], [100, 100], timescale=90000)
-    assert [t for t, _ in C.demux_mp4(enc2)] == [0, 100]
-
-
-def test_mp4_corrupt_streams_raise_valueerror():
-    import pytest as _pytest
-
-    enc = C.encode_mp4([b"aaaa", b"bbbb", b"cccc"], 400)
-    for bad in (
-        enc[:40],                        # no moov at all
-        enc[: len(enc) - 10],            # moov truncated mid-box
-        b"\x00\x00\x00\x0cftypabcd",     # ftyp only
-        enc.replace(b"stco", b"XXXX"),   # sample tables incomplete
-        enc.replace(b"mdhd", b"XXXX"),   # no mdhd
-        b"not an mp4 at all",            # sniff fails
-    ):
-        with _pytest.raises(ValueError):
-            C.demux_mp4(bad)
-
-
-def test_mp4_stsz_overrun_rejected():
-    """A sample that points past the end of the buffer (truncated
-    mdat) raises rather than returning short bytes."""
-    import pytest as _pytest
-    import struct as _struct
-
-    frames = [b"a" * 32, b"b" * 32]
-    enc = C.encode_mp4(frames, 400)
-    # inflate the first stsz entry so the sample overruns the file
-    si = enc.find(b"stsz")
-    entry0 = si + 4 + 4 + 8  # tag + verflags + (fixed, count)
-    bad = enc[:entry0] + _struct.pack(">I", 1 << 24) + enc[entry0 + 4:]
-    with _pytest.raises(ValueError):
-        C.demux_mp4(bad)
-
-
-def test_jpeg_huge_header_dims_rejected_before_alloc():
-    """A tiny payload whose SOF declares 65535x65535 must take the
-    ValueError route, not allocate ~17 GB of coefficient planes and
-    OOM the worker (round-4 review fix: JPEG_MAX_PIXELS)."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    enc = C.encode_jpeg(_gradient_rgb(16, 16))
-    sof = enc.find(b"\xff\xc0")
-    # SOF0 payload: len(2) prec(1) H(2) W(2) — patch H and W
-    huge = (
-        enc[: sof + 5]
-        + _struct.pack(">HH", 65535, 65535)
-        + enc[sof + 9 :]
-    )
-    with _pytest.raises(ValueError, match="JPEG_MAX_PIXELS"):
-        C.decode_jpeg(huge)
-    zero = (
-        enc[: sof + 5] + _struct.pack(">HH", 0, 16) + enc[sof + 9 :]
-    )
-    with _pytest.raises(ValueError, match="zero SOF"):
-        C.decode_jpeg(zero)
-
-
-def test_mp4_zero_sample_track_demuxes_empty():
-    """A structurally valid MP4 whose stsz declares 0 samples demuxes
-    to [] (not a crash) — sample_frames then takes the stand-in path
-    (round-4 review fix)."""
-    import struct as _struct
-
-    enc = C.encode_mp4([b"aaaa"], 400)
-    si = enc.find(b"stsz")
-    cnt = si + 4 + 4 + 4  # tag + verflags + fixed-size field
-    patched = enc[:cnt] + _struct.pack(">I", 0) + enc[cnt + 4 :]
-    assert C.demux_mp4(patched) == []
-
-
-def test_mp4_co64_and_stss_keyframes():
-    """64-bit chunk offsets (co64) demux identically to stco, and
-    keyframes_only restricts to the stss sync set — a grid sampler
-    then seeks keyframes like a real video pipeline. Absent stss,
-    every sample is sync (ISO 14496-12)."""
-    import struct as _struct
-
-    frames = [bytes([i] * (8 + i)) for i in range(9)]
-    enc = C.encode_mp4(frames, 400, sync_every=3)
-    allsmp = C.demux_mp4(enc)
-    assert [b for _, b in allsmp] == frames
-    keys = C.demux_mp4(enc, keyframes_only=True)
-    assert [b for _, b in keys] == [frames[0], frames[3], frames[6]]
-    assert [t for t, _ in keys] == [0, 1200, 2400]
-    # no stss → keyframes_only returns everything
-    enc_nosync = C.encode_mp4(frames, 400)
-    assert C.demux_mp4(enc_nosync, keyframes_only=True) == \
-        C.demux_mp4(enc_nosync)
-
-    # rewrite stco as co64 (same offsets, 64-bit) and re-demux:
-    # identical samples. The box sizes change, so rebuild the moov
-    # by patching the stco box bytes in place.
-    si = enc.find(b"stco")
-    box_start = si - 4
-    (box_len,) = _struct.unpack(">I", enc[box_start:si])
-    (nch,) = _struct.unpack(
-        ">I", enc[si + 8 : si + 12]
-    )
-    offs = _struct.unpack(
-        f">{nch}I", enc[si + 12 : si + 12 + 4 * nch]
-    )
-    co64 = (
-        _struct.pack(">I", 16 + 8 * nch)
-        + b"co64"
-        + b"\x00\x00\x00\x00"
-        + _struct.pack(">I", nch)
-        + b"".join(_struct.pack(">Q", o) for o in offs)
-    )
-    old_box = enc[box_start : box_start + box_len]
-    grown = len(co64) - len(old_box)
-    out = bytearray(enc.replace(old_box, co64))
-    # fix enclosing box sizes (stbl/minf/mdia/trak/moov grew)
-    for tag in (b"stbl", b"minf", b"mdia", b"trak", b"moov"):
-        ti = bytes(out).find(tag)
-        (osz,) = _struct.unpack(">I", out[ti - 4 : ti])
-        out[ti - 4 : ti] = _struct.pack(">I", osz + grown)
-    got = C.demux_mp4(bytes(out))
-    assert [b for _, b in got] == frames
-    assert [t for t, _ in got] == [t for t, _ in allsmp]
-
-
-def test_mp4_fixed_stsz_overflow_rejected_before_alloc():
-    """A fixed-size stsz whose count x size is far beyond the file
-    must raise BEFORE materializing [fixed] * n — a corrupt header
-    (n = 2^30) would otherwise allocate a multi-GB list and OOM the
-    Arrow worker (round-4 review fix)."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    enc = C.encode_mp4([b"a" * 8, b"b" * 8, b"c" * 8], 400)
-    si = enc.find(b"stsz")
-    fixed_at = si + 4 + 4  # tag + verflags → (fixed, count)
-    bad = (
-        enc[:fixed_at]
-        + _struct.pack(">II", 1 << 30, 1 << 30)
-        + enc[fixed_at + 8 :]
-    )
-    with _pytest.raises(ValueError, match="more sample bytes"):
-        C.demux_mp4(bad)
-
-
-def test_mp4_huge_stts_run_clipped_not_allocated():
-    """An stts run count of 0xFFFFFFFF is clipped at the n samples
-    stsz declares (not expanded into a ~34 GB delta list): the demux
-    succeeds and is identical to the unpatched container (round-4
-    review fix)."""
-    import struct as _struct
-
-    enc = C.encode_mp4([b"a" * 8, b"b" * 8, b"c" * 8], 400)
-    ti = enc.find(b"stts")
-    run0_cnt = ti + 4 + 4 + 4  # tag + verflags + entry_count → cnt
-    patched = (
-        enc[:run0_cnt]
-        + _struct.pack(">I", 0xFFFFFFFF)
-        + enc[run0_cnt + 4 :]
-    )
-    assert C.demux_mp4(patched) == C.demux_mp4(enc)
-
-
-def test_mp4_nonincreasing_stsc_rejected():
-    """stsc first_chunk must be strictly increasing (ISO spec); the
-    merged cursor walk depends on it, so a corrupt table raises
-    instead of mis-slicing samples (round-4 review fix)."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    # 5 frames, 2 per chunk → chunks [2,2,1] → stsc runs (1,2),(3,1)
-    enc = C.encode_mp4([b"x" * 4] * 5, 400, samples_per_chunk=2)
-    ci = enc.find(b"stsc")
-    entry1_fc = ci + 4 + 4 + 4 + 12  # second entry's first_chunk
-    bad = (
-        enc[:entry1_fc] + _struct.pack(">I", 1) + enc[entry1_fc + 4 :]
-    )
-    with _pytest.raises(ValueError, match="first_chunk not increasing"):
-        C.demux_mp4(bad)
+    # JPEG is sniffed but has no decoder: SOI + an 8x8 SOF0 + EOI
+    # raises the same not-decodable ValueError as any other format
+    jpg = (b"\xff\xd8\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11"
+           b"\x00\xff\xd9")
+    assert C.sniff(jpg) == "jpeg"
+    with pytest.raises(ValueError, match="not a decodable image"):
+        C.decode_image(jpg)
+    with pytest.raises(ValueError, match="not an image"):
+        C.image_meta(jpg)
 
 
 def _rng(seed=7):
@@ -646,68 +296,6 @@ def test_gif_corrupt_streams_raise_valueerror():
         C.decode_gif(small)
 
 
-def test_jpeg_progressive_matches_baseline_decode():
-    """Progressive (SOF2, spectral selection + successive
-    approximation) decode is BIT-IDENTICAL to the baseline decode of
-    the same image: both encoders quantize to the same coefficients,
-    so a correct multi-pass reassembly (DC first/refine, banded AC
-    first passes at Al=2/1, refinement down to Al=0 with EOB runs and
-    correction bits) reproduces them exactly."""
-    import numpy as _np
-
-    cases = [
-        (_gradient_rgb(24, 33), "444"),
-        (_gradient_rgb(17, 19), "444"),
-        (_rng(42).integers(0, 256, (40, 56, 3), dtype=_np.uint8), "444"),
-        # 420 shapes where the luma raster (ceil(W/8)) is NARROWER
-        # than the MCU-padded grid (mcus_x*2) — the non-interleaved
-        # block-order path the padded grid would silently corrupt
-        (_rng(7).integers(0, 256, (40, 40, 3), dtype=_np.uint8), "420"),
-        (_rng(8).integers(0, 256, (41, 39, 3), dtype=_np.uint8), "420"),
-        # flat image: EOB runs spanning many blocks (eobrun >> 1)
-        (_np.full((64, 64, 3), 130, dtype=_np.uint8), "444"),
-    ]
-    for img, sub in cases:
-        base = C.decode_jpeg(C.encode_jpeg(img, subsample=sub))
-        prog = C.decode_jpeg(
-            C.encode_jpeg_progressive(img, subsample=sub)
-        )
-        assert (base == prog).all(), (img.shape, sub)
-
-
-def test_jpeg_progressive_grayscale():
-    import numpy as _np
-
-    g = _rng(9).integers(0, 256, (23, 31), dtype=_np.uint8)
-    base = C.decode_jpeg(C.encode_jpeg(g))
-    prog = C.decode_jpeg(C.encode_jpeg_progressive(g))
-    assert base.ndim == 2 or base.shape[2:] == ()
-    assert (base == prog).all()
-
-
-def test_jpeg_progressive_truncated_scan_raises():
-    import pytest as _pytest
-
-    enc = C.encode_jpeg_progressive(_gradient_rgb(24, 33))
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(enc[: len(enc) // 2])
-    # drop the final refinement scans entirely (truncate after the
-    # 3rd SOS): every remaining scan is complete, so decode SUCCEEDS
-    # with reduced precision — the progressive contract
-    sos_positions = []
-    p = 0
-    while True:
-        p = enc.find(b"\xff\xda", p + 1)
-        if p < 0:
-            break
-        sos_positions.append(p)
-    assert len(sos_positions) == 10  # the color scan script
-    partial = enc[: sos_positions[3]] + b"\xff\xd9"
-    out = C.decode_jpeg(partial)
-    full = C.decode_jpeg(enc)
-    assert out.shape == full.shape  # coarse but well-formed image
-
-
 def test_gif_frames_compositing_and_disposal():
     """decode_gif_frames composites with GIF89a semantics: transparent
     pixels show the prior canvas, disposal 2 restores the rect to
@@ -770,37 +358,10 @@ def test_gif_frames_transparency_and_background_disposal():
     assert (frames[2][1] == c1).all()
 
 
-def test_jpeg_422_subsampling_baseline_and_progressive():
-    """4:2:2 (2x1 luma sampling — horizontal-only chroma downsample):
-    previously decoder-claimed but encoder-untestable. Pins both the
-    baseline round-trip and progressive bit-equality, including a
-    width where the luma raster is narrower than the MCU-padded grid
-    (W=40: ceil(40/8)=5 < mcus_x*2=6)."""
-    import numpy as _np
-
-    for shape in ((24, 33), (40, 17)):
-        img = _rng(shape[0]).integers(
-            0, 256, (*shape, 3), dtype=_np.uint8
-        )
-        enc = C.encode_jpeg(img, subsample="422")
-        out = C.decode_jpeg(enc)
-        assert out.shape == img.shape
-        # lossy but close on smooth content — use the gradient for a
-        # quality bound, noise only needs shape + prog equality
-        prog = C.decode_jpeg(C.encode_jpeg_progressive(img, "422"))
-        assert (out == prog).all(), shape
-    g = _gradient_rgb(24, 32)
-    out = C.decode_jpeg(C.encode_jpeg(g, subsample="422"))
-    assert _np.abs(out.astype(int) - g.astype(int)).mean() < 12.0
-
-
 def test_decoders_uniform_valueerror_contract_on_truncation():
     """Truncate every codec's valid stream at many byte offsets: each
     decode must either succeed or raise ValueError — NEVER struct.error
-    / IndexError / zlib.error etc. The Arrow kernels route per-row on
-    `except ValueError`; any other exception type fails a whole batch
-    (round-4 hardening: decode_jpeg had this contract, the others got
-    it via _corrupt_as_valueerror)."""
+    / IndexError / zlib.error etc. (via _corrupt_as_valueerror)."""
     import numpy as _np
 
     idx = _rng(30).integers(0, 4, size=(9, 9), dtype=_np.uint8)
@@ -812,13 +373,6 @@ def test_decoders_uniform_valueerror_contract_on_truncation():
         (C.encode_png(img), C.decode_png),
         (C.encode_png_ex(img, color=2, interlace=True), C.decode_png),
         (C.encode_bmp(img), C.decode_bmp),
-        (C.encode_jpeg(img), C.decode_jpeg),
-        (C.encode_jpeg_progressive(img), C.decode_jpeg),
-        (C.encode_mp4([b"abcd" * 4] * 3, 400), C.demux_mp4),
-        (
-            C.encode_wav(_np.linspace(-1, 1, 300).astype(_np.float32), 8000),
-            C.decode_wav,
-        ),
     ]
     for enc, dec in cases:
         for cut in range(0, len(enc), 3):
@@ -871,23 +425,6 @@ def test_png_matrix_round_trip_property(h, w, depth, interlace, seed):
         assert (out == arr).all()
 
 
-@settings(max_examples=15, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=32),
-    w=st.integers(min_value=1, max_value=32),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-    sub=st.sampled_from(["444", "422", "420"]),
-)
-def test_jpeg_progressive_equals_baseline_property(h, w, seed, sub):
-    """For ANY image size/content/subsampling, progressive decode is
-    bit-identical to baseline decode (shared quantized coefficients)."""
-    rng = np.random.RandomState(seed % 2**31)
-    img = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
-    base = C.decode_jpeg(C.encode_jpeg(img, subsample=sub))
-    prog = C.decode_jpeg(C.encode_jpeg_progressive(img, subsample=sub))
-    assert (base == prog).all()
-
-
 def _webp(fourcc: bytes, body: bytes) -> bytes:
     chunk = fourcc + len(body).to_bytes(4, "little") + body
     if len(body) % 2:
@@ -915,10 +452,6 @@ def test_image_meta_headers_only():
     assert "animated" in m["flags"] and "palette" in m["flags"]
     m = C.image_meta(C.encode_bmp(img))
     assert (m["format"], m["width"], m["height"]) == ("bmp", 22, 15)
-    m = C.image_meta(C.encode_jpeg_progressive(img))
-    assert (m["width"], m["height"], m["flags"]) == (22, 15, "progressive")
-    m = C.image_meta(C.encode_jpeg(img))
-    assert m["flags"] == ""
 
     # WebP: hand-built headers (pixel decode needs libwebp; the
     # header layouts are from the public container/bitstream specs)
@@ -1036,16 +569,6 @@ def test_image_meta_negative_bmp_width_and_sofn_dims():
     bmp2 = bytearray(C.encode_bmp(img))
     bmp2[22:26] = _struct.pack("<i", -4)
     assert C.image_meta(bytes(bmp2))["height"] == 4
-
-    # SOF9 (arithmetic sequential): pixel decode rejects it, but the
-    # header-only dimension filter must still report dims
-    jpg = bytearray(C.encode_jpeg(img))
-    i = bytes(jpg).find(b"\xff\xc0")
-    jpg[i + 1] = 0xC9
-    m = C.image_meta(bytes(jpg))
-    assert (m["width"], m["height"]) == (6, 4)
-    with _pytest.raises(ValueError):
-        C.decode_jpeg(bytes(jpg))
 
 
 def test_apng_compositing_blend_and_dispose():
@@ -1196,196 +719,17 @@ def test_ico_legacy_zero_alpha_falls_back_to_and_mask():
         C.png_animation_info(apng[: ac + 6])  # truncated inside acTL
 
 
-def test_audio_header_meta_wav_mp3_flac_ogg():
-    """Header-only audio metadata: WAV via RIFF, MP3 via the first
-    Layer-III frame header (ID3v2 skipped, Xing frame count when
-    present), FLAC via STREAMINFO, OGG via the Vorbis id header +
-    last-page granule. No sample decoding anywhere."""
-    import struct as _struct
-
-    import numpy as _np
-
-    wav = C.encode_wav(_np.zeros(8000, _np.float32), 16000)
-    m = C.audio_header_meta(wav)
-    assert (m["format"], m["sample_rate"], m["duration_ms"]) == (
-        "wav", 16000, 500,
-    )
-
-    # MP3: ID3v2 tag (10 bytes, zero length) + one MPEG1 L3 frame at
-    # 128 kbps / 44100 stereo with an Xing header claiming 38 frames
-    hdr = bytes([0xFF, 0xFB, 0x90, 0x00])  # MPEG1, L3, 128k, 44100
-    side = bytes(32)
-    xing = b"Xing" + _struct.pack(">II", 1, 38)
-    frame = hdr + side + xing + bytes(300)
-    mp3 = b"ID3" + bytes([4, 0, 0, 0, 0, 0, 0]) + frame
-    m = C.audio_header_meta(mp3)
-    assert m["format"] == "mp3" and m["sample_rate"] == 44100
-    assert m["bitrate_kbps"] == 128 and m["channels"] == 2
-    assert m["duration_ms"] == round(1000 * 38 * 1152 / 44100)
-    assert C.sniff(mp3) == "mp3"
-
-    # CBR estimate when no Xing: duration = bytes*8/kbps
-    mp3_cbr = hdr + bytes(1600 - 4)
-    m = C.audio_header_meta(mp3_cbr)
-    assert m["duration_ms"] == round(1600 * 8 / 128)
-
-    # FLAC STREAMINFO: 44100 Hz, 2ch, 88200 samples = 2000 ms
-    v = (44100 << 44) | (1 << 41) | (15 << 36) | 88200
-    streaminfo = bytes(10) + v.to_bytes(8, "big") + bytes(16)
-    flac = (
-        b"fLaC" + bytes([0x80]) + len(streaminfo).to_bytes(3, "big")
-        + streaminfo
-    )
-    m = C.audio_header_meta(flac)
-    assert (m["format"], m["sample_rate"], m["channels"]) == (
-        "flac", 44100, 2,
-    )
-    assert m["duration_ms"] == 2000
-    assert C.sniff(flac) == "flac"
-
-    # OGG-Vorbis: id header page + a last page whose granule = 24000
-    # samples at 8000 Hz = 3000 ms
-    def page(granule, body):
-        return (
-            b"OggS" + bytes([0, 2]) + granule.to_bytes(8, "little")
-            + bytes(12) + bytes([1, len(body)]) + body
-        )
-
-    ident = b"\x01vorbis" + bytes(4) + bytes([1]) + (8000).to_bytes(
-        4, "little"
-    ) + bytes(9)
-    ogg = page(0, ident) + page(24000, b"\x05vorbis")
-    m = C.audio_header_meta(ogg)
-    assert (m["format"], m["sample_rate"], m["channels"]) == (
-        "ogg", 8000, 1,
-    )
-    assert m["duration_ms"] == 3000
-    assert C.sniff(ogg) == "ogg"
-
-    import pytest as _pytest
-
-    for bad in (b"fLaC\x00\x00\x00\x04abcd", b"OggS" + bytes(30),
-                b"ID3" + bytes(20), b"not audio"):
-        with _pytest.raises(ValueError):
-            C.audio_header_meta(bad)
-    for enc in (mp3, flac, ogg):  # truncation contract
-        for cut in range(0, len(enc), 3):
-            try:
-                C.audio_header_meta(enc[:cut])
-            except ValueError:
-                pass
-
-
-def _ebml(eid: int, body: bytes) -> bytes:
-    """EBML element with a 2-byte size field (marker bit 0x40)."""
-    idlen = (eid.bit_length() + 7) // 8
-    assert len(body) < (1 << 14) - 1
-    return (
-        eid.to_bytes(idlen, "big")
-        + (0x4000 | len(body)).to_bytes(2, "big")
-        + body
-    )
-
-
-def test_video_header_meta_mp4_and_webm():
-    """Video pre-decode metadata: MP4 from mvhd/tkhd/stsd (16.16
-    dims, real timescale duration, sample-entry fourcc); WebM from
-    the EBML tree (TimecodeScale x Duration, first video TrackEntry's
-    PixelWidth/Height/CodecID)."""
-    enc = C.encode_mp4(
-        [b"x" * 8] * 5, durations_ms=200, width=320, height=180
-    )
-    m = C.video_header_meta(enc)
-    assert (m["format"], m["width"], m["height"]) == ("mp4", 320, 180)
-    assert m["duration_ms"] == 1000  # 5 x 200 ms
-    assert m["codec"] == "mp4v"
-    assert C.sniff(enc) == "mp4"
-
-    import struct as _struct
-
-    video = _ebml(0xB0, (640).to_bytes(2, "big")) + _ebml(
-        0xBA, (360).to_bytes(2, "big")
-    )
-    track = _ebml(
-        0xAE,
-        _ebml(0x83, b"\x01") + _ebml(0x86, b"V_VP9")
-        + _ebml(0xE0, video),
-    )
-    info = _ebml(0x2AD7B1, (1_000_000).to_bytes(3, "big")) + _ebml(
-        0x4489, _struct.pack(">d", 12_500.0)  # 12.5 s in 1 ms units
-    )
-    segment = _ebml(
-        0x18538067,
-        _ebml(0x1549A966, info) + _ebml(0x1654AE6B, track),
-    )
-    webm = _ebml(0x1A45DFA3, b"") + segment
-    assert C.sniff(webm) == "webm"
-    m = C.video_header_meta(webm)
-    assert (m["format"], m["width"], m["height"]) == ("webm", 640, 360)
-    assert m["codec"] == "V_VP9"
-    assert m["duration_ms"] == 12500
-
-    import pytest as _pytest
-
-    for bad in (b"\x1a\x45\xdf\xa3\x00", enc[:60], b"nope"):
-        with _pytest.raises(ValueError):
-            C.video_header_meta(bad)
-    for cut in range(0, len(webm), 3):  # ValueError contract
-        try:
-            C.video_header_meta(webm[:cut])
-        except ValueError:
-            pass
-
-
-def test_media_meta_review_fixes_bounds_and_vide_trak():
-    """Review fixes pinned: (a) a WebM +inf Duration yields a clamped
-    int32 duration (never OverflowError through the Arrow batch);
-    (b) an OGG whose last page carries granule -1 (continued-packet
-    convention) clamps instead of reporting 2^64 ns; (c) WAV bitrate
-    uses the header's real sample width."""
-    import struct as _struct
-
-    import numpy as _np
-
-    inf_info = _ebml(0x2AD7B1, (1_000_000).to_bytes(3, "big")) + _ebml(
-        0x4489, _struct.pack(">d", float("inf"))
-    )
-    segment = _ebml(0x18538067, _ebml(0x1549A966, inf_info))
-    webm = _ebml(0x1A45DFA3, b"") + segment
-    m = C.video_header_meta(webm)
-    assert m["duration_ms"] == 2**31 - 1  # clamped, no OverflowError
-
-    def page(granule_bytes, body):
-        return (
-            b"OggS" + bytes([0, 2]) + granule_bytes
-            + bytes(12) + bytes([1, len(body)]) + body
-        )
-
-    ident = b"\x01vorbis" + bytes(4) + bytes([1]) + (8000).to_bytes(
-        4, "little"
-    ) + bytes(9)
-    ogg = page(bytes(8), ident) + page(b"\xff" * 8, b"\x05vorbis")
-    m = C.audio_header_meta(ogg)
-    assert m["duration_ms"] == 2**31 - 1  # clamped
-
-    x = _np.zeros(16000, _np.float32)
-    m = C.audio_header_meta(C.encode_wav(x, 16000))
-    assert m["bitrate_kbps"] == 16000 * 1 * 8 * 2 // 1000  # 16-bit PCM
-
-
 @settings(max_examples=120, deadline=None)
 @given(data=st.binary(max_size=400))
 def test_every_parser_valueerror_contract_on_random_bytes(data):
     """Random bytes into EVERY public parse/decode surface: each call
     either succeeds or raises ValueError — never any other exception
-    type (the Arrow per-row routing contract, fuzz-checked)."""
+    type (the _corrupt_as_valueerror contract, fuzz-checked)."""
     C.sniff(data)  # never raises at all
     for fn in (
-        C.image_meta, C.audio_header_meta, C.video_header_meta,
-        C.decode_png, C.decode_gif, C.decode_gif_frames,
+        C.image_meta, C.decode_png, C.decode_gif, C.decode_gif_frames,
         C.decode_apng_frames, C.png_animation_info, C.gif_frame_count,
-        C.decode_ico, C.decode_bmp, C.decode_jpeg, C.decode_wav,
-        C.demux_mp4, C.decode_image,
+        C.decode_ico, C.decode_bmp, C.decode_image,
     ):
         try:
             fn(data)
@@ -1602,91 +946,6 @@ def test_review_fixes_round5_close():
             C.decode_exr(bytes(exr))
 
 
-# --- AIFF / AU / G.711 (CPython audiodata fixtures) ------------------------
-
-
-def _audio(name):
-    p = os.path.join(os.path.dirname(__file__), "golden",
-                     f"pluck-{name}")
-    with open(p, "rb") as f:
-        return f.read()
-
-
-def test_g711_tables_match_stdlib_audioop():
-    """The µ-law and A-law expansion tables are pinned bit-exact
-    against stdlib audioop (the classic Sun g711.c) for all 256
-    codes. Import-guarded: audioop leaves the stdlib in 3.13."""
-    audioop = pytest.importorskip("audioop")
-    ref_u = np.frombuffer(
-        audioop.ulaw2lin(bytes(range(256)), 2), dtype="<i2")
-    assert (C._ULAW_TABLE == ref_u).all()
-    ref_a = np.frombuffer(
-        audioop.alaw2lin(bytes(range(256)), 2), dtype="<i2")
-    assert (C._ALAW_TABLE == ref_a).all()
-
-
-def test_audio_cross_container_same_clip():
-    """CPython's audiodata ships the same 'pluck' clip in WAV, AIFF
-    and AU at several depths. 24-bit decodes are sample-EXACT across
-    all three containers (independent real tooling, three of our
-    decoders); 16-bit containers were converted independently and
-    agree within 1 LSB; G.711 µ-law/A-law reconstructions stay within
-    their quantization step of the PCM16 reference."""
-    w24, r = C.decode_wav(_audio("pcm24.wav"))
-    a24, r2 = C.decode_aiff(_audio("pcm24.aiff"))
-    u24, r3 = C.decode_au(_audio("pcm24.au"))
-    assert r == r2 == r3 == 11025
-    assert w24.size == a24.size == u24.size == 3307
-    assert (w24 == a24).all() and (w24 == u24).all()
-
-    w16, _ = C.decode_wav(_audio("pcm16.wav"))
-    a16, _ = C.decode_aiff(_audio("pcm16.aiff"))
-    u16, _ = C.decode_au(_audio("pcm16.au"))
-    lsb = 1.0 / 32768.0
-    # independent conversions with dither: within a few LSB
-    assert np.abs(w16 - a16).max() <= 4 * lsb
-    assert np.abs(w16 - u16).max() <= 4 * lsb
-
-    ul, _ = C.decode_au(_audio("ulaw.au"))
-    ulc, _ = C.decode_aiff(_audio("ulaw.aifc"))
-    al, _ = C.decode_aiff(_audio("alaw.aifc"))
-    assert np.abs(ul - w16).max() < 0.02   # µ-law quantization bound
-    assert np.abs(ulc - w16).max() < 0.02
-    assert np.abs(al - w16).max() < 0.02   # A-law quantization bound
-
-    for name, fmt in (("pcm24.aiff", "aiff"), ("pcm24.au", "au"),
-                      ("ulaw.aifc", "aiff"), ("ulaw.au", "au")):
-        assert C.sniff(_audio(name)) == fmt
-
-
-def test_aiff_au_corrupt_raise_valueerror():
-    import pytest as _pytest
-
-    good_a, good_u = _audio("pcm16.aiff"), _audio("pcm16.au")
-    for payload, fn in (
-        (good_a[:10], C.decode_aiff),
-        (good_a[:40], C.decode_aiff),     # truncated chunk
-        (b"FORM\x00\x00\x00\x04AIFF", C.decode_aiff),  # no COMM/SSND
-        (good_u[:10], C.decode_au),
-        (b".snd" + b"\x00" * 20, C.decode_au),  # bad offset/encoding
-        (good_u[:4] + (5).to_bytes(4, "big") + good_u[8:],
-         C.decode_au),                     # data offset below header
-    ):
-        with _pytest.raises(ValueError):
-            fn(payload)
-
-
-def test_audio_header_meta_aiff_au():
-    # the pluck fixtures are STEREO 11025 Hz, ~300 ms
-    m = C.audio_header_meta(_audio("pcm16.aiff"))
-    assert m["format"] == "aiff" and m["sample_rate"] == 11025
-    assert m["channels"] == 2 and 295 <= m["duration_ms"] <= 305
-    m = C.audio_header_meta(_audio("ulaw.au"))
-    assert m["format"] == "au" and m["sample_rate"] == 11025
-    assert m["channels"] == 2 and 295 <= m["duration_ms"] <= 305
-    assert m["bitrate_kbps"] == 176  # 8-bit mu-law stereo at 11025
-
-
 def test_new_decoder_family_uniform_error_contract_fuzz():
     """Every new decoder upholds the corrupt->ValueError contract
     under truncation and byte-flip fuzz of its real fixture: the only
@@ -1702,14 +961,10 @@ def test_new_decoder_family_uniform_error_contract_fuzz():
         ("cpython_logo.tiff", C.decode_tiff),
         ("cpython_logo.exr", C.decode_exr),
         ("cpython_logo.bmp", C.decode_bmp),
-        ("pluck-pcm16.aiff", C.decode_aiff),
-        ("pluck-ulaw.au", C.decode_au),
-        ("pluck-pcm24.wav", C.decode_wav),
     ]
     rng = np.random.RandomState(11)
     for name, fn in cases:
-        good = _imghdr(name.split(".")[-1]) if name.startswith(
-            "cpython") else _audio(name.split("pluck-")[1])
+        good = _imghdr(name.split(".")[-1])
         for cut in (3, 9, len(good) // 3, len(good) // 2,
                     len(good) - 7):
             try:
@@ -1725,39 +980,6 @@ def test_new_decoder_family_uniform_error_contract_fuzz():
                 fn(bytes(b))
             except ValueError:
                 pass
-
-
-def test_aiff_au_encoder_duals_round_trip():
-    rng = np.random.RandomState(13)
-    sig = np.clip(rng.randn(4000).astype(np.float32) * 0.3, -1, 1)
-    want = ((np.clip(sig, -1, 1) * 32767).astype(np.int16)
-            .astype(np.float32) / 32768.0)
-    a, ra = C.decode_aiff(C.encode_aiff(sig, 8000))
-    u, ru = C.decode_au(C.encode_au(sig, 8000))
-    assert ra == ru == 8000
-    np.testing.assert_allclose(a, want, atol=1.0 / 32768)
-    np.testing.assert_allclose(u, want, atol=1.0 / 32768)
-    # f80 sample-rate field round-trips exactly for integer rates
-    for r in (8000, 11025, 16000, 22050, 44100, 48000, 96000, 1):
-        assert C._read_f80(C._write_f80(r)) == r
-
-
-def test_audio_review_fixes():
-    # AU size=0 is an EMPTY clip, not unknown; trailing bytes after
-    # the header must not decode as audio
-    import struct as _struct
-    empty = (b".snd" + _struct.pack(">5I", 24, 0, 3, 8000, 1)
-             + b"trailing-metadata")
-    x, rate = C.decode_au(empty)
-    assert x.size == 0 and rate == 8000
-    assert C.audio_header_meta(empty)["duration_ms"] == 0
-    # AIFC G.711 stored bitrate uses 8 bits/sample even when COMM
-    # records the decompressed width
-    m = C.audio_header_meta(_audio("ulaw.aifc"))
-    assert m["format"] == "aiff"
-    assert m["bitrate_kbps"] == 11025 * 2 * 8 // 1000  # == AU branch
-    mu = C.audio_header_meta(_audio("ulaw.au"))
-    assert m["bitrate_kbps"] == mu["bitrate_kbps"]
 
 
 def test_image_meta_covers_round5_formats():

@@ -77,19 +77,36 @@ def test_simhash_banding_exact_band_count():
 def test_stream_epochs_do_not_satisfy_batch_resume(spark, tmp_path):
     """A store holding streaming epochs 0..2 must still build batch
     segments 0..2 (the manifest rows are different kinds)."""
+    import os
+
     from pyspark.sql import functions as F
 
+    from open_source_search_engine_spark.operators.index_build import (
+        build_index,
+    )
     from open_source_search_engine_spark.operators.segments import (
         SegmentStore,
         _append_manifest_row,
         build_segments,
+        pack_postings,
     )
 
     store = SegmentStore(str(tmp_path / "store"))
+    empty = build_index(
+        spark.createDataFrame([], "docid long, text string"),
+        "docid", "text", compute_globals=False,
+    )
     for epoch in range(3):
+        sid = f"stream-{epoch:06d}"
+        # what a committed epoch writes before its manifest row (here
+        # for an empty micro-batch): its segment dir and its partial
+        pack_postings(empty.postings, 2).write.parquet(store.segment_dir(sid))
+        empty.term_stats.write.parquet(
+            os.path.join(store.root, f"term_stats_partial/segment={sid}")
+        )
         _append_manifest_row(
             store.manifest_path,
-            segment_id=f"stream-{epoch:06d}",
+            segment_id=sid,
             part_lo=epoch,
             part_hi=epoch,
             status="committed",

@@ -1,14 +1,7 @@
 """Regression pins for the round-4 ADVICE items fixed in round 5:
-
-1. MP3 sniff requires a plausible frame header (bitrate/sample-rate
-   indices), so truncated JPEG prefixes no longer route into
-   ``audio_header_meta``.
-2. OGG duration validates the candidate last-page header instead of
-   trusting a bare ``rfind(b"OggS")`` that can false-sync on packet
-   data.
-3. ``decode_gif`` resolves the background-color index against the
-   GLOBAL color table (GIF89a spec) even when the frame carries a
-   local palette.
+``decode_gif`` resolves the background-color index against the GLOBAL
+color table (GIF89a spec) even when the frame carries a local palette,
+and clears the background by resolved color, not by index.
 """
 
 from __future__ import annotations
@@ -16,47 +9,6 @@ from __future__ import annotations
 import numpy as np
 
 from open_source_search_engine_spark.sources import codecs as C
-
-
-def test_mp3_sniff_rejects_junk_sync_prefixes():
-    # a 2-byte truncated JPEG starts 0xFF 0xD8 — sync+layer bits hold,
-    # but there is no third byte to carry a bitrate index
-    assert C.sniff(b"\xff\xd8") == "unknown"
-    # bitrate index 15 (invalid) and sample-rate index 3 (reserved)
-    assert C.sniff(b"\xff\xfb\xf0\x00") == "unknown"  # br_idx 15
-    assert C.sniff(b"\xff\xfb\x9c\x00") == "unknown"  # sr_idx 3
-    # a real MPEG1 Layer-III header still sniffs: 128 kbps, 44.1 kHz
-    assert C.sniff(b"\xff\xfb\x90\x00" + bytes(32)) == "mp3"
-    # ID3-tagged payloads are unaffected
-    assert C.sniff(b"ID3" + bytes(16)) == "mp3"
-
-
-def _ogg_page(granule: int, body: bytes, header_type: int = 2) -> bytes:
-    return (
-        b"OggS"
-        + bytes([0, header_type])
-        + granule.to_bytes(8, "little")
-        + bytes(12)
-        + bytes([1, len(body)])
-        + body
-    )
-
-
-def test_ogg_duration_survives_oggs_bytes_inside_packet_data():
-    ident = (
-        b"\x01vorbis" + bytes(4) + bytes([1])
-        + (8000).to_bytes(4, "little") + bytes(9)
-    )
-    # final page's PACKET DATA contains a spurious 'OggS' followed by
-    # an invalid version byte (9) and a garbage granule — a bare
-    # rfind would read duration from the garbage
-    poisoned_body = (
-        b"\x05vorbis" + b"OggS" + bytes([9, 9])
-        + (10**12).to_bytes(8, "little") + bytes(12)
-    )
-    ogg = _ogg_page(0, ident) + _ogg_page(24000, poisoned_body)
-    m = C.audio_header_meta(ogg)
-    assert m["duration_ms"] == 3000  # 24000 samples at 8 kHz
 
 
 def test_gif_background_resolves_against_global_palette():

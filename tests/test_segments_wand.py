@@ -20,6 +20,7 @@ from open_source_search_engine_spark.operators.segments import (
     SegmentStore,
     build_segments,
     compact_segments,
+    finalize_term_stats,
 )
 from open_source_search_engine_spark.operators.wand import PackedIndex
 
@@ -125,9 +126,11 @@ def test_packed_excludes_uncommitted_segment(spark, tmp_path_factory):
 
 
 def test_packed_raises_on_missing_committed_segment(spark, tmp_path_factory):
-    """A committed segment whose dir is gone must fail loudly: globals
-    and term_stats still count its docs, so scoring the remaining
-    segments would return a different top-k with no error."""
+    """A committed segment whose dir or term_stats partial is gone must
+    fail loudly: globals and term_stats still count its docs, so
+    scoring the remaining segments would return a different top-k with
+    no error."""
+    import os
     import shutil
 
     root = str(tmp_path_factory.mktemp("idx_missing_seg"))
@@ -139,6 +142,9 @@ def test_packed_raises_on_missing_committed_segment(spark, tmp_path_factory):
         st.packed(spark)
     with pytest.raises(FileNotFoundError, match="segment=1"):
         PackedIndex(spark, st).wand_topk(["join"], k=5).collect()
+    shutil.rmtree(os.path.join(root, "term_stats_partial", "segment=1"))
+    with pytest.raises(FileNotFoundError, match="segment=1"):
+        finalize_term_stats(spark, st)
 
 
 WAND_CASES = [
