@@ -73,6 +73,14 @@ CHECKS = {
                        "adds no scan or job beyond the pruned blob scan "
                        "itself"),
     ],
+    "wand_driver_scored": [
+        ("In(bucket", "a small query's driver placement scores the same "
+                      "literal-pruned scan: bucket survival pushed down"),
+        ("element_at", "the sub-block row thresholds filter before "
+                       "toArrow() hands the rows to the driver kernel"),
+        ("PushedFilters", "termid and bucket filters reach the parquet "
+                          "scan"),
+    ],
     "field_boost_packed": [
         ("FlatMapGroupsInPandas", "hashgroup scorer over build-time field streams"),
         ("BroadcastHashJoin", "docid→url label join broadcast"),
@@ -156,6 +164,11 @@ NEGATIVE_CHECKS = {
         ("Join", "no threshold-table join: the batch prune is the same "
                  "literal filter as a single query's"),
     ],
+    "wand_driver_scored": [
+        ("FlatMapGroupsInPandas", "scored on the driver: no Python "
+                                  "worker stage"),
+        ("Exchange", "one pruned scan, no shuffle"),
+    ],
     "syngroups": [
         ("Expand", "no distinct-aggregate expansion"),
     ],
@@ -230,8 +243,13 @@ def main() -> None:
         SegmentStore,
         build_segments,
     )
+    from open_source_search_engine_spark.operators import wand as W
     from open_source_search_engine_spark.operators.wand import PackedIndex
 
+    # the wand_* entries audit the workers' placement: with the gate at
+    # 0 no single query is scored on the driver (wand_driver_scored
+    # audits the driver placement's scan on its own)
+    W._DRIVER_SCORE_MAX_DF = 0
     root = tempfile.mkdtemp(prefix="audit_store_")
     store = build_segments(
         spark, docs_meta.select("docid", "text"), SegmentStore(root),
@@ -269,6 +287,10 @@ def main() -> None:
         {"a": ["join", "filter"], "b": (["join"], "and", ["window"])},
         k=10,
     )
+    # the scan a small single query's driver placement toArrow()s
+    plans["wand_driver_scored"] = bidx._single_scan(
+        bidx._query_ctx(["join", "filter"], k=10)
+    )[1]
 
     # hashgroup (anchor) boost served from build-time field streams
     from open_source_search_engine_spark.operators.linkextract import (

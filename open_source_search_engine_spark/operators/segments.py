@@ -868,7 +868,8 @@ def compact_segments(
     segment k-way merged to one block per (termid, bucket) via
     ``_merge_packed_blocks``. The new root's manifest holds one
     committed row for the ``segment=0`` it writes, summing the
-    source's current committed rows. For in-place bounded maintenance
+    source's current committed rows, and the source's merged
+    ``term_stats`` become that segment's partial. For in-place bounded maintenance
     of a live (e.g. streaming-ingest) store, use ``maybe_compact``."""
     from pyspark.sql import Observation
 
@@ -898,7 +899,12 @@ def compact_segments(
             sum_doclen=int(sum(r["sum_doclen"] or 0 for r in src)),
             wall_ms=int((time.time() - t0) * 1000),
         )
-    store.term_stats(spark).write.mode("overwrite").parquet(out.term_stats_path)
+    # the source's merged counts are the new segment's partial, so the
+    # new root finalizes like any store (e.g. after a streamed epoch)
+    store.term_stats(spark).write.mode("overwrite").parquet(
+        os.path.join(out_root, "term_stats_partial/segment=0")
+    )
+    finalize_term_stats(spark, out)
     return out
 
 

@@ -30,16 +30,23 @@ bucket key*. A query is ONE Spark job over a pruned block scan:
    ``_block_survivors`` is the reference implementation the fold is
    pinned to. Every skipped bucket or block is provably unable to
    place a doc in the top-k.
-3. **Score (workers)** — every query shape (AND/OR/NOT, phrase,
-   proximity, density, diversity, field-boosted, and Q-query batches)
-   runs ONE bucket kernel, ``_make_batch_scorer``: it re-checks the
-   bound per bucket and per block row before any blob decode, then
-   scatter-adds idf·tfnorm (one `np.add.at` per query and bucket — no
-   per-posting Python), applies the required count, anti-filter, span
-   kernels and rank multipliers, and keeps a tie-inclusive local
-   top-k. The global merge is ORDER BY LIMIT k (TakeOrderedAndProject —
-   the Msg3a merge shape) for one query, a per-query window for a
-   batch.
+3. **Score (driver or workers)** — every query shape (AND/OR/NOT,
+   phrase, proximity, density, diversity, field-boosted, and Q-query
+   batches) runs ONE bucket kernel, ``_make_batch_scorer``: it
+   re-checks the bound per bucket and per block row before any blob
+   decode, then scatter-adds idf·tfnorm (one `np.add.at` per query and
+   bucket — no per-posting Python), applies the required count,
+   anti-filter, span kernels and rank multipliers, and keeps a
+   tie-inclusive local top-k. Where it runs is one gate on the
+   query's Σ df (``_DRIVER_SCORE_MAX_DF``). A small single query
+   ``toArrow()``s its pruned scan and runs the kernel per bucket on
+   the driver, as the τ seed does — the reference's Msg39 scores a
+   termlist in the process that holds it — then rounds, orders and
+   keeps k there; the result is a ``LocalRelation``, so no result
+   job and no Python worker. A large query, and every batch, runs
+   the kernel in ``applyInPandas`` per bucket; the global merge is
+   ORDER BY LIMIT k (TakeOrderedAndProject — the Msg3a merge shape)
+   for one query, a per-query window for a batch.
 
 Scale: the seed reads a few blocks per term; the bound cache holds
 ≤ n_buckets values per term, and past the literal cap no bounds are
@@ -52,11 +59,15 @@ Head queries prune little (dense scores) but buckets bound memory
 from __future__ import annotations
 
 import threading
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions.varbyte import unpack_docids, unpack_ints, unpack_positions
 from .index_build import B, K1
@@ -132,6 +143,40 @@ def _topk_truncate(uniq: np.ndarray, scores: np.ndarray, k: int):
     kth = np.partition(scores, uniq.size - k)[uniq.size - k]
     keep = scores >= round(float(kth), 4) - _TIE_GRID_EPS
     return uniq[keep], scores[keep]
+
+
+# wide enough that quantizing any finite double cannot overflow it
+_ROUND_CTX = Context(prec=800)
+
+
+def _spark_round(scores: np.ndarray, ndigits: int) -> np.ndarray:
+    """``F.round(score, ndigits)`` on the driver: Spark rounds a double
+    HALF_UP on the JVM's ``Double.toString`` form, not numpy's
+    half-even on the binary value, so a grid tie must round the same
+    way on both placements or their orders differ. Python's ``repr``
+    is the same shortest round-trip form."""
+    q = Decimal(1).scaleb(-ndigits)
+    return np.array(
+        [
+            float(Decimal(repr(v)).quantize(q, ROUND_HALF_UP, _ROUND_CTX))
+            if np.isfinite(v) else v
+            for v in scores.tolist()
+        ],
+        dtype=np.float64,
+    )
+
+
+def _local_frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
+    """A result built from Arrow columns (absent ones empty): Spark
+    holds it as a ``LocalRelation``, so collecting it runs no job. An
+    empty ``createDataFrame([], schema)`` instead collects through a
+    pickled-row RDD — one job and a Python worker."""
+    st = StructType.fromDDL(schema)
+    table = pa.table(
+        {f.name: cols.get(f.name, []) for f in st.fields},
+        schema=to_arrow_schema(st),
+    )
+    return spark.createDataFrame(table, st)
 
 
 def _tfnorm_ub_col():
@@ -259,6 +304,14 @@ BATCH_SCORE_SCHEMA = "query_id string, docid long, score double"
 # 256 cells, local[1]). Past the cap the kernel's own per-bucket and
 # per-row check still skips the decode, so results do not change.
 _LITERAL_PRUNE_MAX_CELLS = 8_192
+
+# Σ df over a single query's termids (negated ones included) below
+# which its pruned scan is scored on the driver instead of in
+# applyInPandas workers. The df values come with the query's term
+# rows, so the gate costs no job. Sized from the measured crossover of
+# the two placements under 4 concurrent clients, where the driver's
+# one Python process serializes their scoring (BENCH/wand_prune.md).
+_DRIVER_SCORE_MAX_DF = 400_000
 
 # cell budget for pre-warming the bound cache in _warm_popular: at
 # 16-128 sandbox buckets this warms all 256 popular terms; at a 64k-
@@ -989,6 +1042,7 @@ class PackedIndex:
             "word_tids": word_tids,
             "prox_w": prox_w,
             "sat": frozenset(),
+            "df_sum": sum(int(r["df"]) for r in rows + neg_rows),
         }
         spec["cut"] = self._seed_cut(spec, k, round_to)
         return spec
@@ -1055,6 +1109,33 @@ class PackedIndex:
             round_to,
         )
 
+    def _single_scan(self, ctx: dict) -> tuple[dict, DataFrame]:
+        """A single query's kernel spec and the ONE scan both
+        placements score: its blocks (termid prune at the scan) → the
+        literal JVM prune (disk-backed stores: ``_apply_prune`` with
+        one spec) → the kernel's columns. Field-boosted queries skip
+        the JVM prune: the bound cache holds BM25-form block bounds,
+        which do not bound a saturation-only field term."""
+        spec = {key: v for key, v in ctx.items() if key != "blocks"}
+        blocks = ctx["blocks"]
+        if self.jvm_prune and spec["kind"] != "field":
+            blocks = self._apply_prune(blocks, [spec])
+        return spec, _project_scorer_cols(blocks, [spec["kind"]])
+
+    def _score_on_driver(self, spec: dict, scan: DataFrame, k: int):
+        """The kernel on the driver over ``scan``'s rows (one job: the
+        ``toArrow()``), bucket by bucket as ``_seed_cut`` scores the
+        seed: (docids, scores) of every bucket's tie-inclusive top-k."""
+        scorer = _make_batch_scorer([spec], k)
+        pdf = scan.toArrow().to_pandas()
+        out = pd.concat(
+            [scorer(g) for _b, g in pdf.groupby("bucket", sort=False)]
+            or [pd.DataFrame({"docid": [], "score": []})],
+            ignore_index=True,
+        )
+        docids = out["docid"].to_numpy(np.int64)
+        return docids, out["score"].to_numpy(np.float64)
+
     def _topk(
         self,
         ctx: dict | None,
@@ -1062,39 +1143,56 @@ class PackedIndex:
         round_to: int | None,
         label_map: DataFrame | None = None,
     ) -> DataFrame:
-        """The single-query plan — ONE action mirroring the relational
-        path's shape: termid prune at the scan → literal JVM prune
-        (disk-backed stores: ``_apply_prune`` with one spec) → the
-        kernel on one spec per bucket → TakeOrderedAndProject. No
-        shuffle: the cache is hash-partitioned by bucket (and a
-        write-time bucketed table's scan reports the same
-        partitioning), so FlatMapGroupsInPandas's
-        ClusteredDistribution is already satisfied. On the cache
-        layout the kernel's own per-bucket / per-row bound check is
-        the prune — skipped rows never decode a blob. Field-boosted
-        queries skip the JVM prune: the bound cache holds BM25-form
-        block bounds, which do not bound a saturation-only field term.
+        """The single-query top-k over ``_single_scan``, placed by one
+        gate on the query's Σ df (``_DRIVER_SCORE_MAX_DF``, negated
+        terms included), which the spec carries as ``df_sum``.
+
+        - Below it (driver): ``toArrow()`` the scan — its one job —
+          run the kernel per bucket exactly as ``_seed_cut`` does,
+          round as Spark's ``round`` does, order by (score desc, docid
+          asc) and keep k. The rows come back as a ``LocalRelation``:
+          collecting them runs no job and no Python worker.
+        - At or above it (workers): the kernel per bucket in
+          ``applyInPandas`` → TakeOrderedAndProject, one action. No
+          shuffle: the cache is hash-partitioned by bucket (and a
+          write-time bucketed table's scan reports the same
+          partitioning), so FlatMapGroupsInPandas's
+          ClusteredDistribution is already satisfied.
+
+        On the cache layout the kernel's own per-bucket / per-row
+        bound check is the prune — skipped rows never decode a blob.
 
         ``label_map`` (docid, label) re-labels output docids and makes
-        the final tie-break run on the label."""
+        the final tie-break run on the label: the driver joins its
+        candidates to it in Spark (the kernel's tie-inclusive
+        truncation kept every candidate that tie-break needs)."""
         if ctx is None:
-            return self.spark.createDataFrame(
-                [],
+            return _local_frame(
+                self.spark,
                 "docid string, score double"
                 if label_map is not None else SCORE_SCHEMA,
             )
-        spec = {key: v for key, v in ctx.items() if key != "blocks"}
-        blocks = ctx["blocks"]
-        if self.jvm_prune and spec["kind"] != "field":
-            blocks = self._apply_prune(blocks, [spec])
-        result = (
-            _project_scorer_cols(blocks, [spec["kind"]])
-            .groupBy("bucket")
-            .applyInPandas(
+        spec, scan = self._single_scan(ctx)
+        score = F.col("score")
+        if spec["df_sum"] < _DRIVER_SCORE_MAX_DF:
+            docids, scores = self._score_on_driver(spec, scan, k)
+            if round_to:
+                scores = _spark_round(scores, round_to)
+            if label_map is None:
+                top = np.lexsort((docids, -scores))[:k]
+                return _local_frame(
+                    self.spark, SCORE_SCHEMA,
+                    docid=docids[top], score=scores[top],
+                )
+            result = _local_frame(
+                self.spark, SCORE_SCHEMA, docid=docids, score=scores
+            )
+        else:
+            result = scan.groupBy("bucket").applyInPandas(
                 _make_batch_scorer([spec], k), schema=BATCH_SCORE_SCHEMA
             )
-        )
-        score = F.round(F.col("score"), round_to) if round_to else F.col("score")
+            if round_to:
+                score = F.round(score, round_to)
         if label_map is not None:
             result = result.join(F.broadcast(label_map), "docid")
             cols = (F.col("label").alias("docid"), score.alias("score"))
@@ -1326,7 +1424,7 @@ class PackedIndex:
                 continue  # AND query with a term the corpus lacks
             qspecs.append(dict(spec, qid=qid))
         if not qspecs:
-            return self.spark.createDataFrame([], BATCH_SCORE_SCHEMA)
+            return _local_frame(self.spark, BATCH_SCORE_SCHEMA)
         blocks = self._blocks(
             sorted({t for q in qspecs for t in _spec_tids(q)})
         )
@@ -1484,6 +1582,7 @@ class PackedIndex:
             "qid": "", "idf": {**idf, **field_widf}, "required": set(),
             "neg_ids": set(), "cut": float("-inf"), "kind": "field",
             "word_tids": None, "prox_w": 0.0, "sat": frozenset(field_widf),
+            "df_sum": sum(int(r["df"]) for r in body_rows + f_rows),
         }
         spec["cut"] = self._seed_cut(spec, k, round_to)
         return self._topk(self._scan(spec), k, round_to, label_map)

@@ -498,6 +498,21 @@ def test_wand_after_compaction(spark, store, tmp_path_factory):
     assert got == want
 
 
+def test_finalize_after_compaction(spark, store, tmp_path_factory):
+    """A compacted root carries its ``segment=0`` term_stats partial,
+    so ``finalize_term_stats`` runs on it (as after a streamed epoch
+    appended to it) and leaves its term_stats unchanged."""
+    out = str(tmp_path_factory.mktemp("idx_compact_final"))
+    cstore = compact_segments(spark, store, out)
+    before = sorted(tuple(r) for r in cstore.term_stats(spark).collect())
+    assert before == sorted(
+        tuple(r) for r in store.term_stats(spark).collect()
+    )
+    finalize_term_stats(spark, cstore)
+    after = sorted(tuple(r) for r in cstore.term_stats(spark).collect())
+    assert after == before
+
+
 def test_field_streams_build_time(spark, tmp_path_factory):
     """Build-time title:/anchor: field postings packed into the same
     segments as the body (XmlDoc::hashTitle/hashIncomingLinkText):
@@ -564,15 +579,22 @@ def test_field_streams_build_time(spark, tmp_path_factory):
     assert 99 in anchor_docs
 
 
-def test_bucketed_table_no_shuffle(spark, store, tmp_path_factory):
+def test_bucketed_table_no_shuffle(
+    spark, store, tmp_path_factory, monkeypatch
+):
     """save_bucketed writes the packed blocks as a bucketed table
     (CLUSTERED BY bucket); the WAND query plan over it contains ZERO
     Exchange — the scan itself satisfies the per-bucket scorer's
     distribution, so blobs never shuffle (the write-time layout the
-    query-time cache stands in for)."""
+    query-time cache stands in for). The plan pinned is the workers'
+    placement (the gate forced to 0); the driver placement's scan is
+    checked the same way."""
+    import open_source_search_engine_spark.operators.wand as W
     from open_source_search_engine_spark.operators.segments import (
         save_bucketed,
     )
+
+    monkeypatch.setattr(W, "_DRIVER_SCORE_MAX_DF", 0)
 
     path = str(tmp_path_factory.mktemp("idx_bucketed")) + "/t"
     save_bucketed(spark, store, "packed_bucketed_t", path)
@@ -612,6 +634,16 @@ def test_bucketed_table_no_shuffle(spark, store, tmp_path_factory):
         assert "docids" in scans[0], plan
         assert "first_docid" not in scans[0], plan
         assert [tuple(r) for r in res.collect()] == want
+        # the driver placement scores the same pruned, projected scan
+        _spec, scan = pidx._single_scan(
+            pidx._query_ctx(["join", "filter"], k=10)
+        )
+        splan = scan._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in splan, splan
+        assert "Join" not in splan, splan
+        assert "PushedFilters" in splan, splan
+        assert splan.count("FileScan parquet") == 1, splan
+        assert "first_docid" not in splan.split("ReadSchema")[1], splan
 
         # jvm_prune OFF: zero Exchange of any kind — the bucketed scan
         # alone satisfies the per-bucket scorer's distribution
@@ -717,15 +749,22 @@ def test_prune_literal_matches_block_survivors(
         spark.sql("DROP TABLE IF EXISTS packed_parity_t")
 
 
-def test_prune_plan_cost_flat_in_buckets(spark, tmp_path_factory):
+def test_prune_plan_cost_flat_in_buckets(
+    spark, tmp_path_factory, monkeypatch
+):
     """The literal prune's plan construction costs the same number of
     py4j calls at 2 and 16 buckets: its thresholds ride in one array
     literal per term and its bucket survival in one parsed ``IN``
     list, so a wider bucket fan-out adds no per-bucket JVM call. Both
-    pruned results equal the relational top-k."""
+    pruned results equal the relational top-k. The workers' placement
+    is counted (the gate forced to 0); the driver placement's scan
+    carries the same ``bucket IN``."""
+    import open_source_search_engine_spark.operators.wand as W
     from open_source_search_engine_spark.operators.segments import (
         save_bucketed,
     )
+
+    monkeypatch.setattr(W, "_DRIVER_SCORE_MAX_DF", 0)
 
     idx = cached_index(spark, SF_SMOKE)
     terms = ["join", "filter"]
@@ -763,6 +802,9 @@ def test_prune_plan_cost_flat_in_buckets(spark, tmp_path_factory):
                     client.send_command = orig
                 plan = res._jdf.queryExecution().executedPlan().toString()
                 assert "In(bucket" in plan, (nb, plan)
+                _spec, scan = pidx._single_scan(pidx._query_ctx(terms, k=3))
+                splan = scan._jdf.queryExecution().executedPlan().toString()
+                assert "In(bucket" in splan, (nb, splan)
                 counts[nb] = len(calls)
                 assert [tuple(r) for r in res.collect()] == want
         finally:
@@ -778,11 +820,21 @@ def test_prune_fallback_and_guards(
     non-positive term weights are rejected before they can flip the
     block-max bound's sign; (c) ``_warm_popular`` pre-warms the bound
     cache on disk-backed stores so a head-term query's first pruned
-    execution runs ONE job."""
+    execution runs ONE job. The plans pinned are the workers'
+    placement (the gate forced to 0); the driver placement's scan
+    gains and loses its thresholds the same way."""
     import open_source_search_engine_spark.operators.wand as W
     from open_source_search_engine_spark.operators.segments import (
         save_bucketed,
     )
+
+    monkeypatch.setattr(W, "_DRIVER_SCORE_MAX_DF", 0)
+
+    def driver_scan_plan():
+        _spec, scan = pidx._single_scan(
+            pidx._query_ctx(["join", "filter"], k=10)
+        )
+        return scan._jdf.queryExecution().executedPlan().toString()
 
     path = str(tmp_path_factory.mktemp("idx_fb")) + "/t"
     save_bucketed(spark, store, "packed_fb_t", path)
@@ -801,12 +853,16 @@ def test_prune_fallback_and_guards(
         pruned = pidx.wand_topk(["join", "filter"], k=10)
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "element_at" in plan, plan
+        assert "element_at" in driver_scan_plan()
         monkeypatch.setattr(W, "_LITERAL_PRUNE_MAX_CELLS", 0)
         res = pidx.wand_topk(["join", "filter"], k=10)
         plan = res._jdf.queryExecution().executedPlan().toString()
         assert "element_at" not in plan, plan
         assert "In(bucket" not in plan, plan
         assert "Join" not in plan, plan
+        splan = driver_scan_plan()
+        assert "element_at" not in splan, splan
+        assert "In(bucket" not in splan, splan
         assert [tuple(r) for r in res.collect()] == want
         # (b) non-positive weights rejected
         with pytest.raises(ValueError, match="positive"):

@@ -9,6 +9,11 @@ query terms, duplicated query terms, k from 1 to 50. The relational
 ``bm25_topk`` path (oracle-checked against DuckDB by the driver) is
 the ground truth; any drift on any drawn query is a real ranking bug.
 
+Each single-query suite runs twice: at the default placement gate
+(these small fixtures score on the driver) and with the gate forced
+to 0 (``_workers`` twins: every query runs the ``applyInPandas``
+plan), so both placements face the oracle on random queries.
+
 Deterministic: one fixed seed, so a failure replays exactly.
 """
 
@@ -24,6 +29,7 @@ from open_source_search_engine_spark.operators.segments import (
     build_segments,
     save_bucketed,
 )
+from open_source_search_engine_spark.operators import wand
 from open_source_search_engine_spark.operators.wand import PackedIndex
 
 SEED = 20260820
@@ -89,9 +95,7 @@ def _want(idx, terms, mode, neg, k):
     ]
 
 
-def test_fuzz_cache_path(spark, fuzz_env):
-    idx, store, trials = fuzz_env
-    pidx = PackedIndex(spark, store)
+def _check_singles(pidx, idx, trials):
     for terms, mode, neg, k in trials:
         got = [
             tuple(r)
@@ -104,7 +108,7 @@ def test_fuzz_cache_path(spark, fuzz_env):
         )
 
 
-def test_fuzz_bucketed_jvm_prune_path(spark, fuzz_env, tmp_path_factory):
+def _check_bucketed(spark, fuzz_env, tmp_path_factory):
     idx, store, trials = fuzz_env
     path = str(tmp_path_factory.mktemp("idx_fuzz_bt")) + "/t"
     save_bucketed(spark, store, "packed_fuzz_bt", path)
@@ -113,18 +117,31 @@ def test_fuzz_bucketed_jvm_prune_path(spark, fuzz_env, tmp_path_factory):
             spark, store, packed=spark.table("packed_fuzz_bt")
         )
         assert pidx.jvm_prune
-        for terms, mode, neg, k in trials:
-            got = [
-                tuple(r)
-                for r in pidx.wand_topk(
-                    terms, k=k, mode=mode, neg_terms=neg
-                ).collect()
-            ]
-            assert got == _want(idx, terms, mode, neg, k), (
-                terms, mode, neg, k,
-            )
+        _check_singles(pidx, idx, trials)
     finally:
         spark.sql("DROP TABLE IF EXISTS packed_fuzz_bt")
+
+
+def test_fuzz_cache_path(spark, fuzz_env):
+    idx, store, trials = fuzz_env
+    _check_singles(PackedIndex(spark, store), idx, trials)
+
+
+def test_fuzz_cache_path_workers(spark, fuzz_env, monkeypatch):
+    monkeypatch.setattr(wand, "_DRIVER_SCORE_MAX_DF", 0)
+    idx, store, trials = fuzz_env
+    _check_singles(PackedIndex(spark, store), idx, trials)
+
+
+def test_fuzz_bucketed_jvm_prune_path(spark, fuzz_env, tmp_path_factory):
+    _check_bucketed(spark, fuzz_env, tmp_path_factory)
+
+
+def test_fuzz_bucketed_jvm_prune_path_workers(
+    spark, fuzz_env, tmp_path_factory, monkeypatch
+):
+    monkeypatch.setattr(wand, "_DRIVER_SCORE_MAX_DF", 0)
+    _check_bucketed(spark, fuzz_env, tmp_path_factory)
 
 
 def test_fuzz_batch_path(spark, fuzz_env):

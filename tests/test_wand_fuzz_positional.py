@@ -9,7 +9,10 @@ and duplicated-word phrases, and random proximity pairs with random
 weights — then requires rank-identity against the independent
 relational implementations (phrase_bm25's offset-corrected adjacency
 aggregation; the exploded-positions span join of proximity_bm25),
-single-query and batched. Seeded: failures replay exactly.
+single-query and batched. The single-query suites also run with the
+placement gate forced to 0 (``_workers`` twins), so the driver and the
+``applyInPandas`` placement both face the oracle. Seeded: failures
+replay exactly.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from open_source_search_engine_spark.operators.segments import (
     SegmentStore,
     build_segments,
 )
+from open_source_search_engine_spark.operators import wand
 from open_source_search_engine_spark.operators.wand import PackedIndex
 
 SEED = 20260820
@@ -116,7 +120,7 @@ def _prox_want(idx, t1, t2, w, k):
     ]
 
 
-def test_fuzz_phrase(spark, pos_env):
+def _check_phrases(pos_env):
     idx, pidx, phrases, _ = pos_env
     for words, k in phrases:
         got = [
@@ -130,7 +134,7 @@ def test_fuzz_phrase(spark, pos_env):
         assert got == want, (words, k)
 
 
-def test_fuzz_proximity(spark, pos_env):
+def _check_prox(pos_env):
     idx, pidx, _, prox = pos_env
     for t1, t2, w, k in prox:
         got = [
@@ -140,6 +144,24 @@ def test_fuzz_proximity(spark, pos_env):
             ).collect()
         ]
         assert got == _prox_want(idx, t1, t2, w, k), (t1, t2, w, k)
+
+
+def test_fuzz_phrase(spark, pos_env):
+    _check_phrases(pos_env)
+
+
+def test_fuzz_phrase_workers(spark, pos_env, monkeypatch):
+    monkeypatch.setattr(wand, "_DRIVER_SCORE_MAX_DF", 0)
+    _check_phrases(pos_env)
+
+
+def test_fuzz_proximity(spark, pos_env):
+    _check_prox(pos_env)
+
+
+def test_fuzz_proximity_workers(spark, pos_env, monkeypatch):
+    monkeypatch.setattr(wand, "_DRIVER_SCORE_MAX_DF", 0)
+    _check_prox(pos_env)
 
 
 def test_fuzz_batch_positional(spark, pos_env):
